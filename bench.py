@@ -40,7 +40,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from syslog_ng_spark.catalog import QUERIES  # noqa: E402
-from syslog_ng_spark.session import get_session  # noqa: E402
+from syslog_ng_spark.session import DEFAULT_CPUS, get_session  # noqa: E402
 
 BENCH_QUERIES = [
     "q1_pricing_summary",
@@ -226,7 +226,7 @@ def main() -> None:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     loadavg_start = os.getloadavg()
     probe = min(cpu_probe() for _ in range(3))  # min-of-3, like the queries
-    cpus = os.cpu_count() or 1
+    host_cpus = os.cpu_count() or 1
     spark = get_session("syslog-ng-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -257,7 +257,10 @@ def main() -> None:
         "sf": sf,
         "n_runs": N_RUNS,
         "loadavg_start": [round(x, 2) for x in loadavg_start],
-        "cpus": cpus,
+        # the local[N] parallelism the queries ran with; loadavg is
+        # host-wide, so it is read against host_cpus
+        "cpus": int(DEFAULT_CPUS),
+        "host_cpus": host_cpus,
         "cpu_probe_sec": probe,
     }
     # regression floor: each query is compared against its recorded
@@ -298,7 +301,7 @@ def main() -> None:
             # Spark work started is contention, not a code regression —
             # say so in the artifact instead of asking the reader to guess
             out["flags_suspect_host_contention"] = bool(flagged) and (
-                loadavg_start[0] > 0.25 * cpus
+                loadavg_start[0] > 0.25 * host_cpus
             )
     # Line order matters: the driver preserves only the TAIL of stdout
     # (2000 chars as of r10 — BENCH_r09/r10.json both recorded

@@ -962,7 +962,10 @@ def filter_predicate(
             out = out | rec(a)
         return out
     if op == "not":
-        return ~rec(node["arg"])
+        # a filter is two-valued: where() already drops a NULL (an
+        # unset field) as no-match, so its negation must keep it — also
+        # what routes such a message to a final/fallback path's sibling
+        return ~F.coalesce(rec(node["arg"]), F.lit(False))
     if op == "severity":
         return flt.severity_filter(resolve("severity"), node["lo"], node["hi"])
     if op == "facility":

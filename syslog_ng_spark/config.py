@@ -23,6 +23,7 @@ a reference user can port a config block by transliteration:
 from __future__ import annotations
 
 from collections.abc import Mapping
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -102,25 +103,28 @@ def _override_pid(df: DataFrame) -> DataFrame:
     return df.withColumn("pid", F.lit(_os.getpid()).cast(pid_t))
 
 
-def _generator_values(df: DataFrame, spec: Mapping, macro_cols: Mapping,
-                      template_format) -> DataFrame:
-    """example-msg-generator values(NAME => tpl): names of core
-    message fields render into their flat columns; every other name
-    is an arbitrary NV pair and lands in the canonical `sdata` map —
-    the reference's nv-table, which value-pairs scoping / --key
-    globbing ($(graphite-output --key test.*), functional
-    test_graphite_output.py) selects from, and schema_resolver
-    resolves ${name} template refs from."""
+def _generated_messages(df: DataFrame, spec: Mapping) -> DataFrame:
+    """example-msg-generator message body over a frame of event ids,
+    the same in batch and daemon mode: values(NAME => tpl) render
+    against the empty message (names of core message fields into their
+    flat columns; every other name is an arbitrary NV pair and lands in
+    the canonical `sdata` map — the reference's nv-table, which
+    value-pairs scoping / --key globbing ($(graphite-output --key
+    test.*), functional test_graphite_output.py) selects from, and
+    schema_resolver resolves ${name} template refs from), then
+    template() renders MESSAGE against the resulting NV set; the
+    default MESSAGE is the module's fixed marker line."""
+    from syslog_ng_spark.operators.actions import _MACRO_COLS
+    from syslog_ng_spark.template import template_format
+
+    tpls = spec.get("templates")
     nv: dict[str, str] = {}
     for name, tpl in (spec.get("values") or {}).items():
-        if name in macro_cols:
-            df = template_format(df, tpl, target=macro_cols[name],
-                                 templates=spec.get("templates"))
+        if name in _MACRO_COLS:
+            df = template_format(df, tpl, target=_MACRO_COLS[name], templates=tpls)
         else:
-            tmp = f"_genv{len(nv)}"
-            df = template_format(df, tpl, target=tmp,
-                                 templates=spec.get("templates"))
-            nv[name] = tmp
+            nv[name] = f"_genv{len(nv)}"
+            df = template_format(df, tpl, target=nv[name], templates=tpls)
     if nv:
         df = df.withColumn(
             "sdata",
@@ -129,7 +133,10 @@ def _generator_values(df: DataFrame, spec: Mapping, macro_cols: Mapping,
                 F.array(*[F.col(c).cast("string") for c in nv.values()]),
             ),
         ).drop(*nv.values())
-    return df
+    body = spec.get("template")
+    if body:
+        return template_format(df, body, target="message", templates=tpls)
+    return df.withColumn("message", F.lit("-- Generated message. --"))
 
 
 def _apply_log_msg_size(df: DataFrame, spec: Mapping) -> DataFrame:
@@ -164,26 +171,40 @@ def _apply_recv_tz(df: DataFrame, spec: Mapping) -> DataFrame:
     return df
 
 
+def _parse_source(df: DataFrame, spec: Mapping) -> DataFrame:
+    """Source-side front-end of every line-reading source, in batch and
+    daemon mode alike: log-msg-size chunking, then the source-level
+    parse (the daemon's file()/pipe() default; the .conf compiler sets
+    these from flags()): syslog_parse parses each line into the
+    canonical columns, message_from_raw is flags(no-parse) — the whole
+    line becomes MESSAGE."""
+    df = _apply_log_msg_size(df, spec)
+    if spec.get("syslog_parse") == "rfc5424":
+        return parsers.syslog_parser_5424(
+            df, default_pri=spec.get("default_pri", 13))
+    if spec.get("syslog_parse"):
+        return _apply_recv_tz(parsers.syslog_parser_3164(
+            df, year=spec.get("year", 2024),
+            default_pri=spec.get("default_pri", 13)), spec)
+    if spec.get("message_from_raw"):
+        return df.withColumn("message", F.col("raw"))
+    return df
+
+
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    """Heterogeneous frames (multi-driver sources, junction channels)
+    align by name; absent columns are NULL, like NV pairs absent on a
+    message."""
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
+
+
 def _source_raw(spark: SparkSession, spec: Mapping) -> DataFrame:
     kind = spec["kind"]
     if kind == "msg-generator":
-        # modules/examples/sources/msg-generator: values(NAME => tpl)
-        # render against the empty message, then template() renders
-        # MESSAGE against the resulting NV set (source-side template);
-        # default MESSAGE is the module's fixed marker line
-        from syslog_ng_spark.operators.actions import _MACRO_COLS
-        from syslog_ng_spark.template import template_format
-
-        df = spark.range(int(spec.get("num", 1))).select(
-            F.col("id").alias("event_id"))
-        df = _generator_values(df, spec, _MACRO_COLS, template_format)
-        body = spec.get("template")
-        if body:
-            df = template_format(df, body, target="message",
-                                 templates=spec.get("templates"))
-        else:
-            df = df.withColumn("message", F.lit("-- Generated message. --"))
-        return df
+        # modules/examples/sources/msg-generator
+        return _generated_messages(
+            spark.range(int(spec.get("num", 1))).select(
+                F.col("id").alias("event_id")), spec)
     if kind == "file":
         if spec.get("pad_size"):
             # pad-size(N): fixed-size padded records, not lines
@@ -193,32 +214,15 @@ def _source_raw(spark: SparkSession, spec: Mapping) -> DataFrame:
             blobs = spark.read.format("binaryFile").load(spec["path"])
             df = record_messages(blobs, spec["pad_size"]).drop(
                 "path", "record_no")
+            # a record is not a line: log-msg-size never splits it
+            spec = {**spec, "log_msg_size": None}
         else:
             df = files.text_lines(
                 spark, spec["path"], recursive=spec.get("recursive", False))
-            df = _apply_log_msg_size(df, spec)
-        # source-level parse (the daemon's file()/pipe() default; the
-        # .conf compiler sets these from flags()): syslog_parse parses
-        # each line into the canonical columns, message_from_raw is
-        # flags(no-parse) — the whole line becomes MESSAGE
-        if spec.get("syslog_parse") == "rfc5424":
-            df = parsers.syslog_parser_5424(
-                df, default_pri=spec.get("default_pri", 13))
-        elif spec.get("syslog_parse"):
-            df = _apply_recv_tz(parsers.syslog_parser_3164(
-                df, year=spec.get("year", 2024),
-                default_pri=spec.get("default_pri", 13)), spec)
-        elif spec.get("message_from_raw"):
-            df = df.withColumn("message", F.col("raw"))
-        return df
+        return _parse_source(df, spec)
     if kind == "union":
-        # multi-driver source statements / multi-source log paths:
-        # heterogeneous frames align by name, absent columns NULL
-        dfs = [_source(spark, s) for s in spec["sources"]]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        # multi-driver source statements / multi-source log paths
+        return _union([_source(spark, s) for s in spec["sources"]])
     if kind == "program-source":
         # program() source (modules/afprog): run the command once
         # driver-side (matching the daemon's single-host spawn), one
@@ -232,17 +236,7 @@ def _source_raw(spark: SparkSession, spec: Mapping) -> DataFrame:
         lines = [(ln,) for ln in proc.stdout.splitlines()]
         df = spark.createDataFrame(lines, "raw string") if lines else \
             spark.createDataFrame([], "raw string")
-        df = _apply_log_msg_size(df, spec)
-        if spec.get("syslog_parse") == "rfc5424":
-            df = parsers.syslog_parser_5424(
-                df, default_pri=spec.get("default_pri", 13))
-        elif spec.get("syslog_parse"):
-            df = _apply_recv_tz(parsers.syslog_parser_3164(
-                df, year=spec.get("year", 2024),
-                default_pri=spec.get("default_pri", 13)), spec)
-        elif spec.get("message_from_raw"):
-            df = df.withColumn("message", F.col("raw"))
-        return df
+        return _parse_source(df, spec)
     if kind == "internal":
         # internal(): the daemon's own diagnostics — an empty canonical
         # frame in batch (there is no daemon), kept so reference configs
@@ -283,12 +277,6 @@ def _source_raw(spark: SparkSession, spec: Mapping) -> DataFrame:
             since=spec.get("since"),
         )
     raise ValueError(f"unknown source kind: {kind}")
-
-
-def _referenced(template: str, templates: Mapping | None) -> set:
-    from syslog_ng_spark.template import referenced_names
-
-    return referenced_names(template, dict(templates) if templates else None)
 
 
 def _tpl_compiler(df: DataFrame, templates: Mapping | None):
@@ -440,47 +428,14 @@ def _step(df: DataFrame, spec: Mapping, templates: Mapping | None = None) -> Dat
             value_col = compile_template(value, df, templates=templates)
         else:
             value_col = F.lit(value)
-        field = spec["field"]
-        if "." in field and field not in df.columns:
-            # dotted NV name (".app.name"): NV pairs live in the sdata
-            # map in this datamodel (SURVEY §1), not as literal dotted
-            # columns — so templates/filters resolve it like any NV
-            base = df if "sdata" in df.columns else df.withColumn(
-                "sdata", F.create_map().cast("map<string,string>"))
-            cond = _cond()
-            current = F.coalesce(
-                F.col("sdata"), F.create_map().cast("map<string,string>"))
-            updated = F.map_concat(
-                F.map_filter(current, lambda k, _: k != F.lit(field)),
-                F.create_map(F.lit(field), value_col.cast("string")))
-            if cond is not None:
-                updated = F.when(cond, updated).otherwise(F.col("sdata"))
-            return base.withColumn("sdata", updated)
-        return rewrite.set_field(df, field, value_col, condition=_cond())
+        return rewrite.set_field(df, spec["field"], value_col, condition=_cond())
     if op == "rewrite-subst":
         return rewrite.subst(df, spec["field"], spec["pattern"], spec["replacement"],
                              condition=_cond())
     if op == "rewrite-unset":
-        cond = _cond()
-        if cond is None:
-            return rewrite.unset(df, *spec["fields"])
-        # conditional unset: per-row NULL-out (the column itself stays)
-        out = df
-        for f_ in spec["fields"]:
-            out = out.withColumn(
-                f_, F.when(cond, F.lit(None)).otherwise(F.col(f_)))
-        return out
+        return rewrite.unset(df, *spec["fields"], condition=_cond())
     if op == "set-tag":
-        cond = _cond()
-        base = df if "tags" in df.columns else df.withColumn(
-            "tags", F.array().cast("array<string>"))
-        tagged = rewrite.set_tag(base, spec["tag"])
-        if cond is None:
-            return tagged
-        return base.withColumn(
-            "tags",
-            F.when(cond, F.array_union(F.col("tags"), F.array(F.lit(spec["tag"]))))
-            .otherwise(F.col("tags")))
+        return rewrite.set_tag(df, spec["tag"], condition=_cond())
     if op == "set-severity":
         return rewrite.set_severity(df, spec["level"], condition=_cond())
     # ---- ops reachable from the .conf front-end (confcompile) ----
@@ -528,13 +483,7 @@ def _step(df: DataFrame, spec: Mapping, templates: Mapping | None = None) -> Dat
         }[spec["app"]]
         return fn(df)
     if op == "clear-tag":
-        cond = _cond()
-        if cond is None:
-            return rewrite.clear_tag(df, spec["tag"])
-        return df.withColumn(
-            "tags",
-            F.when(cond, F.array_remove(F.col("tags"), spec["tag"]))
-            .otherwise(F.col("tags")))
+        return rewrite.clear_tag(df, spec["tag"], condition=_cond())
     if op == "set-facility":
         return rewrite.set_facility(df, spec["facility"], condition=_cond())
     if op == "rewrite-groupunset":
@@ -546,25 +495,25 @@ def _step(df: DataFrame, spec: Mapping, templates: Mapping | None = None) -> Dat
     if op == "junction":
         # junction { channel{...}; ... } / if-elif-else sugar: the frame
         # fans out into every channel, channel outputs union back into
-        # the path (cfg-tree.c multiplexer). Batch = unionByName with
-        # allowMissingColumns — a branch that parses new columns yields
-        # NULLs on the others, like NV pairs absent on a message.
+        # the path (cfg-tree.c multiplexer)
         outs = []
         for chan in spec["channels"]:
             branch = df
             for step in chan["steps"]:
                 branch = _step(branch, step, templates=templates)
             outs.append(branch)
-        merged = outs[0]
-        for b in outs[1:]:
-            merged = merged.unionByName(b, allowMissingColumns=True)
-        return merged
+        return _union(outs)
     if op == "unsupported":
         raise NotImplementedError(
             f"step driver {spec.get('driver')!r} has no Spark analog "
             "(compiled with strict=False)"
         )
     raise ValueError(f"unknown step op: {op}")
+
+
+# the destination spec fields that hold templates: $SEQNUM in any of
+# them numbers the frame this destination writes
+_TEMPLATE_FIELDS = ("template", "message", "key", "topic")
 
 
 def _destination(df: DataFrame, spec: Mapping, templates: Mapping | None = None) -> int:
@@ -574,8 +523,16 @@ def _destination(df: DataFrame, spec: Mapping, templates: Mapping | None = None)
     carried a seqnum column) so a long-lived caller (the daemon's
     foreachBatch) can advance its per-destination counter by exactly
     what was numbered instead of re-counting the batch."""
+    from syslog_ng_spark.operators.delivery import (
+        ensure_seqnum_counted, release_numbering_cache)
+
     kind = spec["kind"]
-    if spec.get("suppress") and not df.isStreaming:
+    if kind == "unsupported":
+        raise NotImplementedError(
+            f"destination driver {spec.get('driver')!r} has no Spark analog "
+            "(compiled with strict=False)"
+        )
+    if spec.get("suppress"):
         # suppress(N): per-writer duplicate collapse
         # (lib/logwriter.c log_writer_is_msg_suppressed) — applied to
         # THIS destination's view only, like each LogWriter owning its
@@ -584,94 +541,68 @@ def _destination(df: DataFrame, spec: Mapping, templates: Mapping | None = None)
         from syslog_ng_spark.operators.correlate import writer_suppress
 
         df = writer_suppress(df, seconds=int(spec["suppress"]))
-    if kind == "parquet":
-        sinks.write_parquet(df, spec["path"], partition_by=spec.get("partition_by", ()),
-                            mode=spec.get("mode", "overwrite"))
-    elif kind == "csv":
-        sinks.write_csv(df, spec["path"], mode=spec.get("mode", "overwrite"))
-    elif kind == "json":
-        sinks.write_json(df, spec["path"], mode=spec.get("mode", "overwrite"))
-    elif kind == "text":
-        # file() destination: an optional template() renders each line
-        # (the reference's file-dest default is $ISODATE $HOST $MSGHDR$MSG)
-        if "template" in spec:
-            from syslog_ng_spark.operators.delivery import (
-                ensure_seqnum_counted, release_numbering_cache)
-            from syslog_ng_spark.template import template_format
+    # $SEQNUM: the writer's counter numbers what THIS destination
+    # delivers, after suppress, continuing from seqnum_start
+    df, numbered = ensure_seqnum_counted(
+        df, *(spec.get(f) for f in _TEMPLATE_FIELDS), templates=templates,
+        start=spec.get("seqnum_start", 1))
+    try:
+        if kind == "parquet":
+            sinks.write_parquet(df, spec["path"], partition_by=spec.get("partition_by", ()),
+                                mode=spec.get("mode", "overwrite"))
+        elif kind == "csv":
+            sinks.write_csv(df, spec["path"], mode=spec.get("mode", "overwrite"))
+        elif kind == "json":
+            sinks.write_json(df, spec["path"], mode=spec.get("mode", "overwrite"))
+        elif kind == "text":
+            # file() destination: an optional template() renders each line
+            # (the reference's file-dest default is $ISODATE $HOST $MSGHDR$MSG)
+            if "template" in spec:
+                from syslog_ng_spark.template import template_format
 
-            df, numbered = ensure_seqnum_counted(
-                df, spec["template"], templates=templates,
-                start=spec.get("seqnum_start", 1))
-            rendered = template_format(df, spec["template"].rstrip("\n"),
-                                       target="rendered", templates=templates)
-            sinks.write_text(rendered, spec["path"], column="rendered",
-                             mode=spec.get("mode", "overwrite"))
-            release_numbering_cache(df)
-            return numbered
-        else:
-            sinks.write_text(df, spec["path"], column=spec.get("column", "raw"),
-                             mode=spec.get("mode", "overwrite"))
-    elif kind == "program":
-        start = spec.get("seqnum_start", 1)
-        dest = sinks.ProgramDestination(
-            command=spec["command"], template=spec.get("template", "$MESSAGE"),
-            templates=templates, seqnum_start=start,
-        )
-        dest.write(df)
-        return dest.seqnum_start - start
-    elif kind == "elasticsearch":
-        sinks.elasticsearch_http(spec["url"], spec.get("index", "syslog-ng")).write(df)
-    elif kind == "unsupported":
-        raise NotImplementedError(
-            f"destination driver {spec.get('driver')!r} has no Spark analog "
-            "(compiled with strict=False)"
-        )
-    elif kind == "network":
-        # network()/syslog() with optional transport(tls) tls(...) (r8)
-        tls_spec = spec.get("tls")
-        tls = sinks.TlsOptions(**tls_spec) if tls_spec else None
-        start = spec.get("seqnum_start", 1)
-        dest = sinks.NetworkDestination(
-            targets=[tuple(t) for t in spec["targets"]],
-            template=spec.get("template", "$MESSAGE"),
-            framing=spec.get("framing", "newline"),
-            tls=tls,
-            templates=templates,
-            seqnum_start=start,
-        )
-        dest.write(df)
-        return dest.seqnum_start - start
-    elif kind == "kafka":
-        numbered = 0
-        if not df.isStreaming:
-            from syslog_ng_spark.operators.delivery import (
-                ensure_seqnum_counted, release_numbering_cache)
-
-            df, numbered = ensure_seqnum_counted(
-                df, spec.get("message"), spec.get("key"), spec.get("topic"),
-                templates=templates, start=spec.get("seqnum_start", 1))
-        sinks.kafka_sink(
-            df,
-            spec["brokers"],
-            message=spec.get("message", "$MESSAGE"),
-            key=spec.get("key"),
-            topic=spec.get("topic", "syslog-ng"),
-            fallback_topic=spec.get("fallback_topic"),
-            templates=templates,
-        )
-        if not df.isStreaming:
-            # unconditional: _numbered attaches a persisted layout
-            # cache even on the numbered==0 empty-frame path, and
-            # release is a no-op for frames without one — a daemon's
-            # empty micro-batches must not each leak a pin (r12
-            # ADVICE)
-            release_numbering_cache(df)
-        return numbered
-    elif kind == "none":
-        pass
-    else:
-        raise ValueError(f"unknown destination kind: {kind}")
-    return 0
+                rendered = template_format(df, spec["template"].rstrip("\n"),
+                                           target="rendered", templates=templates)
+                sinks.write_text(rendered, spec["path"], column="rendered",
+                                 mode=spec.get("mode", "overwrite"))
+            else:
+                sinks.write_text(df, spec["path"], column=spec.get("column", "raw"),
+                                 mode=spec.get("mode", "overwrite"))
+        elif kind == "program":
+            sinks.ProgramDestination(
+                command=spec["command"], template=spec.get("template", "$MESSAGE"),
+                templates=templates,
+            ).write(df)
+        elif kind == "elasticsearch":
+            sinks.elasticsearch_http(spec["url"], spec.get("index", "syslog-ng")).write(df)
+        elif kind == "network":
+            # network()/syslog() with optional transport(tls) tls(...) (r8)
+            tls_spec = spec.get("tls")
+            sinks.NetworkDestination(
+                targets=[tuple(t) for t in spec["targets"]],
+                template=spec.get("template", "$MESSAGE"),
+                framing=spec.get("framing", "newline"),
+                tls=sinks.TlsOptions(**tls_spec) if tls_spec else None,
+                templates=templates,
+            ).write(df)
+        elif kind == "kafka":
+            sinks.kafka_sink(
+                df,
+                spec["brokers"],
+                message=spec.get("message", "$MESSAGE"),
+                key=spec.get("key"),
+                topic=spec.get("topic", "syslog-ng"),
+                fallback_topic=spec.get("fallback_topic"),
+                templates=templates,
+            )
+        elif kind != "none":
+            raise ValueError(f"unknown destination kind: {kind}")
+    finally:
+        # unconditional: the numbering attaches a persisted layout
+        # cache even on the numbered==0 empty-frame path, and release
+        # is a no-op for frames without one — neither a daemon's empty
+        # micro-batches nor a failed or unsupported write may leak a pin
+        release_numbering_cache(df)
+    return numbered
 
 
 def build_pipeline(spark: SparkSession, spec: Mapping) -> DataFrame:
@@ -801,11 +732,7 @@ def _source_stream(spark: SparkSession, spec: Mapping) -> DataFrame:
             df = stream_src.socket_lines(
                 spark, spec.get("host", "localhost"), spec.get("port", 514))
     elif kind == "union":
-        dfs = [_source_stream(spark, s) for s in spec["sources"]]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        return _union([_source_stream(spark, s) for s in spec["sources"]])
     elif kind == "msg-generator":
         # daemon mode: one message per freq() tick off the rate
         # source; num() caps via a value filter (the stream then idles,
@@ -818,9 +745,6 @@ def _source_stream(spark: SparkSession, spec: Mapping) -> DataFrame:
         # run the source at 1 row/s and keep every round(freq)-th
         # tick (non-integer periods > 1 s round to the nearest
         # second).
-        from syslog_ng_spark.operators.actions import _MACRO_COLS
-        from syslog_ng_spark.template import template_format
-
         freq = float(spec.get("freq", 1) or 1)
         num = int(spec.get("num", 1))
         if freq <= 1:
@@ -835,27 +759,12 @@ def _source_stream(spark: SparkSession, spec: Mapping) -> DataFrame:
                 (F.col("value") % period == 0)
                 & (F.col("value") < num * period)
             ).select((F.col("value") / period).cast("long").alias("event_id"))
-        df = _generator_values(df, spec, _MACRO_COLS, template_format)
-        body = spec.get("template")
-        if body:
-            df = template_format(df, body, target="message")
-        else:
-            df = df.withColumn("message", F.lit("-- Generated message. --"))
-        return _apply_source_options(df, spec)
+        return _apply_source_options(_generated_messages(df, spec), spec)
     else:
         raise NotImplementedError(
             f"source kind {kind!r} has no streaming mode — journals and "
             "mboxes ingest as incremental batches (see journal_cursors)")
-    df = _apply_log_msg_size(df, spec)
-    if spec.get("syslog_parse") == "rfc5424":
-        df = parsers.syslog_parser_5424(
-            df, default_pri=spec.get("default_pri", 13))
-    elif spec.get("syslog_parse"):
-        df = _apply_recv_tz(parsers.syslog_parser_3164(
-            df, year=spec.get("year", 2024),
-            default_pri=spec.get("default_pri", 13)), spec)
-    elif spec.get("message_from_raw"):
-        df = df.withColumn("message", F.col("raw"))
+    df = _parse_source(df, spec)
     if kind == "socket-stream":
         df = _mangle_hostname(df, spec)
     return _apply_source_options(df, spec)
@@ -960,17 +869,8 @@ def run_conf_stream(
         ]
         # per-destination $SEQNUM continuation: the daemon's LogWriter
         # counter lives for the daemon's lifetime, so each micro-batch
-        # continues where the last ended (one count job per batch,
-        # only when a destination template actually references SEQNUM)
-        seq_dests = [
-            i for i, d in enumerate(dests)
-            if any(
-                t and "SEQNUM" in _referenced(t, tpls)
-                for t in (d.get("template"), d.get("message"), d.get("key"),
-                          d.get("topic"))
-            )
-        ]
-        seq_next = dict.fromkeys(seq_dests, 1)
+        # continues where the last ended
+        seq_next = [1] * len(dests)
 
         def write_batch(batch_df, _id, _dests=dests, _tpls=tpls, _seq=seq_next,
                         _steps=batch_steps, _rcpt=rcpt_path):
@@ -991,15 +891,12 @@ def run_conf_stream(
                 for step in _steps:
                     batch_df = _step(batch_df, step, templates=_tpls)
             # each destination reports how many rows IT numbered (0 if
-            # the frame already carried seqnum) — no extra count job,
-            # and the continuation point can't desync from what the
-            # writer actually assigned
+            # its templates don't reference $SEQNUM) — no extra count
+            # job, and the continuation point can't desync from what
+            # the writer actually assigned
             for i, d in enumerate(_dests):
-                if i in _seq:
-                    d = {**d, "seqnum_start": _seq[i]}
-                numbered = _destination(batch_df, d, templates=_tpls)
-                if i in _seq:
-                    _seq[i] += numbered or 0
+                _seq[i] += _destination(
+                    batch_df, {**d, "seqnum_start": _seq[i]}, templates=_tpls)
             if _rcpt:
                 release_numbering_cache(rcpt_frame)
                 tmp = _rcpt + ".tmp"

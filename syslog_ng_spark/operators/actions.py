@@ -194,7 +194,7 @@ def compile_condition(cond: str, df: DataFrame) -> Column:
     if m:
         colname, pattern = m.group(1), m.group(2).replace('\\"', '"')
         return F.col(_MACRO_COLS.get(colname.upper(), colname)).rlike(pattern)
-    return TemplateCompiler(schema_resolver(df.columns))._cond(cond)
+    return TemplateCompiler(schema_resolver(df.dtypes))._cond(cond)
 
 
 def _scope_cols(scope: str, df: DataFrame) -> list[str]:
@@ -326,7 +326,7 @@ def _render(
     per-context message array, binding $(grep)/@N in the action
     templates to the live context (context-funcs.c semantics)."""
     compiler = TemplateCompiler(
-        schema_resolver(base.columns),
+        schema_resolver(base.dtypes),
         context_col=context_col if context_col in base.columns else None,
     )
     rendered: dict[str, Column] = {}
@@ -479,7 +479,7 @@ def prepare_actions(
                 if name not in capture_cols:
                     capture_cols.append(name)
         if r.context_id is not None:
-            ctx_id = TemplateCompiler(schema_resolver(matched.columns)).compile(r.context_id)
+            ctx_id = TemplateCompiler(schema_resolver(matched.dtypes)).compile(r.context_id)
             matched = matched.withColumn("CONTEXT_ID", ctx_id)
         matched_by_rule[r.rule_id] = matched
 
@@ -518,7 +518,7 @@ def prepare_actions(
         trig = matched_by_rule[r.rule_id]
         if a.condition:
             trig = trig.where(compile_condition(a.condition, trig))
-        compiler = TemplateCompiler(schema_resolver(trig.columns))
+        compiler = TemplateCompiler(schema_resolver(trig.dtypes))
         rendered = {
             _MACRO_COLS.get(n, n): compiler.compile(_rewrite_context_funcs(t))
             for n, t in a.message.values.items()
@@ -542,7 +542,7 @@ def prepare_actions(
                 sel.append(F.lit(None).cast(dt).alias(c))
         # the context-id template renders against the TRIGGERING
         # message (patterndb.c:333-336 log_template_format(triggering_msg))
-        ctx_id = TemplateCompiler(schema_resolver(trig.columns)).compile(
+        ctx_id = TemplateCompiler(schema_resolver(trig.dtypes)).compile(
             a.create_context.id_template
         )
         return trig.select(*sel, ctx_id.alias("CONTEXT_ID"))
@@ -615,7 +615,7 @@ def prepare_actions(
         # (log_template_format_with_context, patterndb.c:326-328):
         # $(grep)/@N walk the expiring context's collected rows
         compiler = TemplateCompiler(
-            schema_resolver(cand.columns),
+            schema_resolver(cand.dtypes),
             context_col="_context" if "_context" in cand.columns else None)
         rendered = {
             _MACRO_COLS.get(n, n): compiler.compile(_rewrite_context_funcs(t))

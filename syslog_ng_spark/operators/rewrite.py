@@ -17,7 +17,22 @@ from syslog_ng_spark.datamodel import FACILITY_NAMES, SEVERITY_NAMES
 
 
 def set_field(df: DataFrame, field: str, value: Column, condition: Column | None = None) -> DataFrame:
-    """set('value', value(field)) (reference: lib/rewrite/rewrite-set.c)."""
+    """set('value', value(field)) (reference: lib/rewrite/rewrite-set.c).
+    A dotted NV name that is not a column (".app.name") is set in the
+    `sdata` map: NV pairs live there in this datamodel (SURVEY §1), not
+    as literal dotted columns, so templates and filters resolve it like
+    any NV pair."""
+    if "." in field and field not in df.columns:
+        empty = F.create_map().cast("map<string,string>")
+        if "sdata" not in df.columns:
+            df = df.withColumn("sdata", empty)
+        updated = F.map_concat(
+            F.map_filter(F.coalesce(F.col("sdata"), empty),
+                         lambda k, _: k != F.lit(field)),
+            F.create_map(F.lit(field), value.cast("string")))
+        if condition is not None:
+            updated = F.when(condition, updated).otherwise(F.col("sdata"))
+        return df.withColumn("sdata", updated)
     if condition is not None and field in df.columns:
         value = F.when(condition, value).otherwise(F.col(field))
     return df.withColumn(field, value)
@@ -39,9 +54,14 @@ def subst(
     return df.withColumn(field, new)
 
 
-def unset(df: DataFrame, *fields: str) -> DataFrame:
-    """unset(value(field)) (lib/rewrite/rewrite-unset.c)."""
-    return df.drop(*fields)
+def unset(df: DataFrame, *fields: str, condition: Column | None = None) -> DataFrame:
+    """unset(value(field)) (lib/rewrite/rewrite-unset.c). With a
+    condition the matching rows' values become NULL; the column stays."""
+    if condition is None:
+        return df.drop(*fields)
+    for f in fields:
+        df = df.withColumn(f, F.when(condition, F.lit(None)).otherwise(F.col(f)))
+    return df
 
 
 def unset_map_keys(df: DataFrame, map_field: str, *keys: str) -> DataFrame:
@@ -52,13 +72,26 @@ def unset_map_keys(df: DataFrame, map_field: str, *keys: str) -> DataFrame:
     )
 
 
-def set_tag(df: DataFrame, tag: str, tags_field: str = "tags") -> DataFrame:
-    """set-tag() (lib/rewrite/rewrite-set-tag.c); idempotent like the ref."""
-    return df.withColumn(tags_field, F.array_union(F.col(tags_field), F.array(F.lit(tag))))
+def set_tag(
+    df: DataFrame, tag: str, tags_field: str = "tags", condition: Column | None = None
+) -> DataFrame:
+    """set-tag() (lib/rewrite/rewrite-set-tag.c); idempotent like the
+    ref. A frame without a tags column gets an empty one first."""
+    if tags_field not in df.columns:
+        df = df.withColumn(tags_field, F.array().cast("array<string>"))
+    new = F.array_union(F.col(tags_field), F.array(F.lit(tag)))
+    if condition is not None:
+        new = F.when(condition, new).otherwise(F.col(tags_field))
+    return df.withColumn(tags_field, new)
 
 
-def clear_tag(df: DataFrame, tag: str, tags_field: str = "tags") -> DataFrame:
-    return df.withColumn(tags_field, F.array_remove(F.col(tags_field), tag))
+def clear_tag(
+    df: DataFrame, tag: str, tags_field: str = "tags", condition: Column | None = None
+) -> DataFrame:
+    new = F.array_remove(F.col(tags_field), tag)
+    if condition is not None:
+        new = F.when(condition, new).otherwise(F.col(tags_field))
+    return df.withColumn(tags_field, new)
 
 
 def groupset(

@@ -59,6 +59,42 @@ def read_jdbc(spark, url: str, table: str, **options) -> DataFrame:
     )
 
 
+class _PartitionDelivery:
+    """Driver side shared by the per-partition destinations (http,
+    key-value, network, program): the templates render JVM-side, each
+    partition delivers its rows and returns one stats tuple, and the
+    driver sums them. A destination numbers $SEQNUM itself when its
+    templates reference it and the frame carries no seqnum yet, and
+    continues that counter across write() calls like the daemon's
+    per-writer seq_num. Subclasses are dataclasses with `templates`
+    and `seqnum_start` fields."""
+
+    def _deliver(self, df: DataFrame, tpls: Sequence[str], send, keys: Sequence[str]) -> dict:
+        from .operators.delivery import (
+            ensure_seqnum_counted, release_numbering_cache)
+        from .template import compile_template
+
+        df, numbered = ensure_seqnum_counted(
+            df, *tpls, templates=self.templates, start=self.seqnum_start)
+        rendered = df.select(*[
+            compile_template(t, df, templates=self.templates).alias(f"_t{i}")
+            for i, t in enumerate(tpls)])
+        stats = rendered.rdd.mapPartitionsWithIndex(send).collect()
+        self.seqnum_start += numbered
+        release_numbering_cache(df)
+        return {k: sum(s[i] for s in stats) for i, k in enumerate(keys)}
+
+    def write_stream(self, df: DataFrame, checkpoint: str, trigger_available_now: bool = True):
+        """Streaming flavor: each micro-batch goes through the same
+        write() path via foreachBatch."""
+        writer = df.writeStream.foreachBatch(lambda batch_df, _id: self.write(batch_df)).option(
+            "checkpointLocation", checkpoint
+        )
+        if trigger_available_now:
+            writer = writer.trigger(availableNow=True)
+        return writer.start()
+
+
 # ---------------------------------------------------------------------------
 # http() destination
 #
@@ -107,7 +143,7 @@ def default_http_action(status: int) -> str:
 
 
 @dataclass
-class HttpDestination:
+class HttpDestination(_PartitionDelivery):
     """http() destination: templated body, batching, response-code
     handling, multi-target failover. ``urls`` are load-balancer
     targets; ``template`` is a syslog-ng body() template (rendered
@@ -240,39 +276,13 @@ class HttpDestination:
     def write(self, df: DataFrame) -> dict:
         """Deliver a batch DataFrame; returns aggregate delivery stats
         (one small tuple per partition reaches the driver)."""
-        from .operators.delivery import (
-            ensure_seqnum_counted, release_numbering_cache)
-        from .template import compile_template
-
-        df, numbered = ensure_seqnum_counted(
-            df, self.template, templates=self.templates, start=self.seqnum_start)
-        body = compile_template(self.template, df, templates=self.templates)
-        rendered = df.select(body.alias("_body"))
-        dest = self
-        stats = (
-            rendered.rdd.mapPartitionsWithIndex(
-                lambda pid, rows: dest._send_partition(pid, rows)
-            )
-            .collect()
-        )
-        self.seqnum_start += numbered
-        release_numbering_cache(df)
-        keys = ("delivered", "dropped", "failed", "batches", "requests")
-        return {k: sum(s[i] for s in stats) for i, k in enumerate(keys)}
-
-    def write_stream(self, df: DataFrame, checkpoint: str, trigger_available_now: bool = True):
-        """Streaming flavor: each micro-batch goes through the same
-        batched POST path via foreachBatch."""
-        writer = df.writeStream.foreachBatch(lambda batch_df, _id: self.write(batch_df)).option(
-            "checkpointLocation", checkpoint
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return self._deliver(
+            df, (self.template,), self._send_partition,
+            ("delivered", "dropped", "failed", "batches", "requests"))
 
 
 @dataclass
-class KvStoreDestination:
+class KvStoreDestination(_PartitionDelivery):
     """Generic key-value connector destination — the representative of
     the reference's connector family (redis SET/HSET —
     modules/redis/redis.c; mongodb inserts — modules/afmongodb;
@@ -296,7 +306,7 @@ class KvStoreDestination:
     templates: Mapping[str, str] | None = None
     seqnum_start: int = 1
 
-    def _send_partition(self, rows):
+    def _send_partition(self, _pid: int, rows):
         client = self.client_factory()
         sent = batches = 0
         try:
@@ -319,33 +329,9 @@ class KvStoreDestination:
         yield (sent, batches)
 
     def write(self, df: DataFrame) -> dict:
-        from .operators.delivery import (
-            ensure_seqnum_counted, release_numbering_cache)
-        from .template import compile_template
-
-        df, numbered = ensure_seqnum_counted(
-            df, self.key_template, self.value_template,
-            templates=self.templates, start=self.seqnum_start)
-        rendered = df.select(
-            compile_template(self.key_template, df, templates=self.templates).alias("_key"),
-            compile_template(self.value_template, df, templates=self.templates).alias("_value"),
-        )
-        dest = self
-        stats = rendered.rdd.mapPartitions(dest._send_partition).collect()
-        self.seqnum_start += numbered
-        release_numbering_cache(df)
-        return {
-            "sent": sum(s[0] for s in stats),
-            "batches": sum(s[1] for s in stats),
-        }
-
-    def write_stream(self, df: DataFrame, checkpoint: str, trigger_available_now: bool = True):
-        writer = df.writeStream.foreachBatch(lambda batch_df, _id: self.write(batch_df)).option(
-            "checkpointLocation", checkpoint
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return self._deliver(
+            df, (self.key_template, self.value_template), self._send_partition,
+            ("sent", "batches"))
 
 
 @dataclass
@@ -455,7 +441,7 @@ class TlsOptions:
 
 
 @dataclass
-class NetworkDestination:
+class NetworkDestination(_PartitionDelivery):
     """network()/syslog() destination (reference: modules/afsocket
     afsocket-dest.c): a line-oriented TCP sender per partition, with
     optional RFC6587 octet-counted framing (syslog() with
@@ -570,32 +556,8 @@ class NetworkDestination:
 
     # -- driver-side ------------------------------------------------------
     def write(self, df: DataFrame) -> dict:
-        from .operators.delivery import (
-            ensure_seqnum_counted, release_numbering_cache)
-        from .template import compile_template
-
-        df, numbered = ensure_seqnum_counted(
-            df, self.template, templates=self.templates, start=self.seqnum_start)
-        body = compile_template(self.template, df, templates=self.templates)
-        rendered = df.select(body.alias("_body"))
-        dest = self
-        stats = rendered.rdd.mapPartitionsWithIndex(
-            lambda pid, rows: dest._send_partition(pid, rows)
-        ).collect()
-        self.seqnum_start += numbered
-        release_numbering_cache(df)
-        return {
-            "delivered": sum(s[0] for s in stats),
-            "reconnects": sum(s[1] for s in stats),
-        }
-
-    def write_stream(self, df: DataFrame, checkpoint: str, trigger_available_now: bool = True):
-        writer = df.writeStream.foreachBatch(lambda batch_df, _id: self.write(batch_df)).option(
-            "checkpointLocation", checkpoint
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return self._deliver(
+            df, (self.template,), self._send_partition, ("delivered", "reconnects"))
 
 
 def network_load_balancer(targets: Sequence[str], port: int = 514, **kwargs) -> NetworkDestination:
@@ -611,7 +573,7 @@ def network_load_balancer(targets: Sequence[str], port: int = 514, **kwargs) -> 
 
 
 @dataclass
-class ProgramDestination:
+class ProgramDestination(_PartitionDelivery):
     """program() destination (reference: modules/afprog/afprog.c):
     pipe templated lines into a child process's stdin. The daemon
     spawns the command once, writes each rendered message as a line,
@@ -693,32 +655,8 @@ class ProgramDestination:
 
     # -- driver-side ------------------------------------------------------
     def write(self, df: DataFrame) -> dict:
-        from .operators.delivery import (
-            ensure_seqnum_counted, release_numbering_cache)
-        from .template import compile_template
-
-        df, numbered = ensure_seqnum_counted(
-            df, self.template, templates=self.templates, start=self.seqnum_start)
-        body = compile_template(self.template, df, templates=self.templates)
-        rendered = df.select(body.alias("_body"))
-        dest = self
-        stats = rendered.rdd.mapPartitionsWithIndex(
-            lambda pid, rows: dest._write_partition(pid, rows)
-        ).collect()
-        self.seqnum_start += numbered
-        release_numbering_cache(df)
-        return {
-            "delivered": sum(s[0] for s in stats),
-            "respawns": sum(s[1] for s in stats),
-        }
-
-    def write_stream(self, df: DataFrame, checkpoint: str, trigger_available_now: bool = True):
-        writer = df.writeStream.foreachBatch(lambda batch_df, _id: self.write(batch_df)).option(
-            "checkpointLocation", checkpoint
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return self._deliver(
+            df, (self.template,), self._write_partition, ("delivered", "respawns"))
 
 
 def stream_to_memory(df: DataFrame, name: str, output_mode: str = "append"):

@@ -1205,7 +1205,7 @@ def _attach_chain_columns(pool: DataFrame, timeout_seeds, events: DataFrame,
         def _has_ctx(t: str) -> bool:
             return _template_uses_context_refs(t) or "$(context-" in t
 
-        compiler0 = TemplateCompiler(schema_resolver(pool.columns))
+        compiler0 = TemplateCompiler(schema_resolver(pool.dtypes))
         plain_vals: dict = {}
         ctx_val_tpls: dict = {}
         for n, t in a.message.values.items():
@@ -1284,7 +1284,7 @@ def _attach_chain_columns(pool: DataFrame, timeout_seeds, events: DataFrame,
         pool2 = pool.select(
             *[F.col(c).alias(f"_o_{c}") for c in prev_cols], *seedcols
         )
-        compiler1 = TemplateCompiler(schema_resolver(pool2.columns))
+        compiler1 = TemplateCompiler(schema_resolver(pool2.dtypes))
         rendered1 = {}
         for tgt, t in plain_vals.items():
             col = compiler1.compile(t)

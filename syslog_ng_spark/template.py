@@ -466,13 +466,20 @@ for _name, _fn in _DATE_FNS.items():
     MACROS[f"P_{_name}"] = lambda f=_fn: f(F.current_timestamp())
 
 
-def schema_resolver(columns: list[str]) -> Callable[[str], Column | None]:
-    """Resolver over a known schema: hard macros first, then exact
-    column names, then dotted NV names via the `sdata` map. Names that
-    resolve to nothing are UNSET (render '' / take the :-default) —
-    like logmsg's nv-table, and unlike a bare F.col() which would blow
-    up analysis on a missing column."""
-    cols = set(columns)
+def schema_resolver(
+    columns: list[tuple[str, str]] | list[str],
+) -> Callable[[str], Column | None]:
+    """Resolver over a known schema — a frame's `dtypes` (bare column
+    names also work, but then no column is known to be a map): hard
+    macros first, then exact column names, then dotted NV names —
+    read from a map column named by the longest dotted prefix (".kv.id"
+    from the ".kv" map a prefixed kv-parser writes), else from the
+    `sdata` map. Names that resolve to nothing are UNSET (render '' /
+    take the :-default) — like logmsg's nv-table, and unlike a bare
+    F.col() which would blow up analysis on a missing column."""
+    schema = [c if isinstance(c, tuple) else (c, "") for c in columns]
+    cols = {c for c, _ in schema}
+    maps = {c for c, t in schema if t.startswith("map<")}
 
     def resolve(name: str) -> Column | None:
         if name in MACROS:
@@ -511,9 +518,13 @@ def schema_resolver(columns: list[str]) -> Callable[[str], Column | None]:
                 F.concat(MACROS["HOSTID"](), F.lit("@"),
                          F.lpad(F.lower(F.hex(c)), 16, "0")),
             ).otherwise(F.lit(""))
-        if "sdata" in cols:  # NV pairs (incl. dotted names) live in the map
-            return F.col("sdata").getItem(name)
-        return None
+        nv = F.col("sdata").getItem(name) if "sdata" in cols else None
+        for i in range(len(name) - 1, 0, -1):  # longest map prefix first
+            if name[i] == "." and name[:i] in maps:
+                # a set() of the same dotted name lands in sdata
+                item = F.col(f"`{name[:i]}`").getItem(name[i + 1:]).cast("string")
+                return item if nv is None else F.coalesce(item, nv)
+        return nv  # NV pairs (incl. dotted names) live in the sdata map
 
     return resolve
 
@@ -853,7 +864,7 @@ _SYM = {"==": "eq", "!=": "ne", "<": "lt", "<=": "le", ">": "gt", ">=": "ge"}
 class TemplateCompiler:
     """Compiles template strings to Columns. `resolver` maps a value
     name to a Column or None (= unset); build one with
-    `schema_resolver(df.columns)` or pass your own. With
+    `schema_resolver(df.dtypes)` or pass your own. With
     `escape=True`, substituted VALUES (not literal text) get " \\ '
     backslash-escaped — the reference's template escape option for
     rendering into quoted contexts (lib/template/escaping.c,
@@ -1743,7 +1754,7 @@ def compile_template(
     correlation context for $(grep)/$(context-*); `python_funcs`
     registers callables for $(python)."""
     if df is not None:
-        resolver = schema_resolver(df.columns)
+        resolver = schema_resolver(df.dtypes)
     else:
 
         def blind(name: str) -> Column | None:

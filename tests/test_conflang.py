@@ -952,6 +952,55 @@ log {{ source(s_f); filter(f_err); rewrite(r_mask); destination(d_f); }};
     ]
 
 
+def test_run_conf_template_reads_prefixed_kv_map(spark, tmp_path):
+    """kv-parser(prefix(".kv.")) writes a `.kv` map column; a
+    destination template's ${.kv.id} reads each message's id from it."""
+    src = tmp_path / "in.log"
+    src.write_text("".join(
+        f"<14>Jan  5 10:00:0{i} web-1 app[1]: req id={i} code=200\n"
+        for i in range(3)))
+    outdir = tmp_path / "out"
+    frames = run_conf(spark, f"""
+source s {{ file("{src}"); }};
+parser p {{ kv-parser(prefix(".kv.")); }};
+destination d {{ file("{outdir}" template("${{.kv.id}}\\n")); }};
+log {{ source(s); parser(p); destination(d); }};
+""")
+    out = sorted(r["value"] for r in spark.read.text(str(outdir)).collect())
+    assert out == ["0", "1", "2"]
+    # the map column itself is unchanged
+    assert sorted(r[".kv"]["id"] for r in frames[0].collect()) == out
+
+
+def test_run_conf_set_dotted_name_under_kv_prefix(spark, tmp_path):
+    """set() of a dotted name the `.kv` map lacks lands in the NV map;
+    ${.kv.extra} still reads it while ${.kv.id} reads the kv map."""
+    src = tmp_path / "in.log"
+    src.write_text("".join(
+        f"<14>Jan  5 10:00:0{i} web-1 app[1]: req id={i}\n" for i in range(2)))
+    outdir = tmp_path / "out"
+    run_conf(spark, f"""
+source s {{ file("{src}"); }};
+parser p {{ kv-parser(prefix(".kv.")); }};
+rewrite r {{ set("x" value(".kv.extra")); }};
+destination d {{ file("{outdir}" template("${{.kv.id}}-${{.kv.extra}}\\n")); }};
+log {{ source(s); parser(p); rewrite(r); destination(d); }};
+""")
+    out = sorted(r["value"] for r in spark.read.text(str(outdir)).collect())
+    assert out == ["0-x", "1-x"]
+
+
+def test_schema_resolver_reads_map_prefix_for_every_caller(spark):
+    """Every resolver built from a frame's dtypes — the one destination
+    templates, actions and grouping contexts all use — reads a dotted
+    name from the map column named by its prefix."""
+    from syslog_ng_spark.template import TemplateCompiler, schema_resolver
+
+    df = spark.createDataFrame([({"id": "7"},)], "`.kv` map<string,string>")
+    col = TemplateCompiler(schema_resolver(df.dtypes)).compile("${.kv.id}")
+    assert df.select(col.alias("v")).first()["v"] == "7"
+
+
 def test_run_conf_if_else_junction_routing(spark, tmp_path):
     """if/elif/else end-to-end: every message takes exactly one branch
     (guards are mutually exclusive and exhaustive), branch rewrites

@@ -6,8 +6,9 @@
 2. delivery-order numbering persists the frame so nondeterministic
    upstreams (round-robin repartition) cannot shift rows between the
    counting and consuming jobs.
-3. config.run_conf_stream scans d['topic'] for $SEQNUM (kafka dynamic
-   topics) — pinned via the shared field-scan helper.
+3. a $SEQNUM reference in a kafka destination's topic alone numbers
+   the frame (kafka dynamic topics), so the daemon continues that
+   counter instead of restarting at 1 every micro-batch.
 4. config._destination returns the numbered count so the daemon's
    per-destination counter advances by what was actually numbered
    (0 when the frame already carries seqnum).
@@ -91,16 +92,20 @@ def test_destination_returns_numbered_count(spark, tmp_path):
     assert _destination(df, spec3) == 0
 
 
-def test_kafka_topic_template_scanned_for_seqnum():
-    # the daemon's seq_dests scan must include d['topic'] — the batch
-    # kafka path numbers on it, so the stream path must continue the
-    # counter rather than restart at 1 every micro-batch
-    import inspect
-
+def test_kafka_topic_template_scanned_for_seqnum(spark, monkeypatch):
+    # the topic is the spec's only $SEQNUM reference: _destination
+    # numbers the frame kafka receives, from seqnum_start, and reports
+    # the count the daemon continues its counter from
     from syslog_ng_spark import config as cfg
 
-    src = inspect.getsource(cfg.run_conf_stream)
-    assert 'd.get("topic")' in src
+    seen = []
+    monkeypatch.setattr(cfg.sinks, "kafka_sink",
+                        lambda df, *a, **kw: seen.extend(df.collect()))
+    df = spark.createDataFrame([("a",), ("b",), ("c",)], ["message"])
+    spec = {"kind": "kafka", "brokers": "localhost:9092",
+            "topic": "t-$SEQNUM", "fallback_topic": "t", "seqnum_start": 5}
+    assert cfg._destination(df, spec) == 3
+    assert sorted(r["seqnum"] for r in seen) == [5, 6, 7]
 
 
 def test_pii_caller_category_order_controls_precedence(spark):

@@ -256,6 +256,44 @@ log {{ source(s); destination(d); }};
     assert _lines(out3) == ["12:00 tz-test"]
 
 
+def test_batch_and_daemon_write_the_same_rows(spark, tmp_path):
+    """One conf through the shared source front-end in both modes: a
+    flags(no-parse) file source and a time-zone() 3164 source, then
+    conditional set-tag() and unset(). run_conf and run_conf_stream
+    write the same rows."""
+    raw_dir, tz_dir = tmp_path / "raw", tmp_path / "tz"
+    raw_dir.mkdir()
+    tz_dir.mkdir()
+    (raw_dir / "a.log").write_text("plain error line\nplain ok line\n")
+    (tz_dir / "a.log").write_text(
+        "<11>Jan  1 12:00:00 h p: an error here\n"
+        "<14>Jan  1 12:00:00 h q: fine\n")
+
+    def conf(out):
+        return f"""
+source s_raw {{ file("{raw_dir}/*.log" flags(no-parse)); }};
+source s_tz {{ file("{tz_dir}/*.log" time-zone("+02:00")); }};
+rewrite r_tag {{ set-tag("hot" condition(message("error"))); }};
+rewrite r_unset {{ unset(value("PROGRAM") condition(level(err..emerg))); }};
+destination d {{ file("{out}" template("$HOUR:$MIN|$HOST|$PROGRAM|$TAGS|$MESSAGE\\n")); }};
+log {{ source(s_raw); source(s_tz); rewrite(r_tag); rewrite(r_unset); destination(d); }};
+"""
+
+    run_conf(spark, conf(tmp_path / "batch"))
+    queries = run_conf_stream(spark, conf(tmp_path / "daemon"),
+                              str(tmp_path / "ckpt"), available_now=True)
+    for q in queries:
+        q.awaitTermination(120)
+    batch = _lines(tmp_path / "batch")
+    assert batch == _lines(tmp_path / "daemon")
+    assert batch == [
+        "10:00|h|q|.source.s_tz|fine",
+        "10:00|h||.source.s_tz,hot|an error here",
+        ":|||.source.s_raw,hot|plain error line",
+        ":|||.source.s_raw|plain ok line",
+    ]
+
+
 def test_log_msg_size_splits_long_lines(spark, tmp_path):
     """log-msg-size(N): an over-long line yields the whole max-sized
     buffer as one message, i.e. splits into N-sized chunks
