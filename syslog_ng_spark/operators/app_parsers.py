@@ -44,48 +44,35 @@ def apache_accesslog_parser(
     don't match yield nulls (the reference's drop-invalid is a
     .where(col(prefix+'response').isNotNull()) away).
 
-    The 11-group regex runs ONCE per row via parsers._single_pass_groups
-    (the per-column regexp_extract form re-executed it ~11x per row —
-    the same pathology urltools.url_normalize measured at 2.5x)."""
-    from syslog_ng_spark.operators.parsers import _single_pass_groups
-
-    staged = df.withColumn("_ag", _single_pass_groups(F.col(col), _APACHE_RE, 11))
+    The 11-group regex runs once per row (parsers._parse_once); the
+    per-column regexp_extract form re-executed it ~11x per row."""
+    from syslog_ng_spark.operators.parsers import _group, _parse_once
 
     def g(i: int) -> Column:
-        return F.coalesce(F.element_at(F.col("_ag"), i), F.lit(""))
+        return F.coalesce(_group(i), F.lit(""))
 
     def nullable(c: Column) -> Column:
         return F.when(c != "", c)
 
     raw = nullable(g(7))
-    return (
-        staged.withColumn(prefix + "vhost", nullable(g(1)))
-        .withColumn(prefix + "port", nullable(g(2)).cast("int"))
-        .withColumn(prefix + "clientip", nullable(g(3)))
-        .withColumn(prefix + "ident", nullable(g(4)))
-        .withColumn(prefix + "auth", nullable(g(5)))
-        .withColumn(
-            prefix + "ts",
-            F.try_to_timestamp(nullable(g(6)), F.lit("dd/MMM/yyyy:HH:mm:ss Z")),
-        )
-        .withColumn(prefix + "verb", F.regexp_extract(raw, r"^(\S+)", 1))
-        .withColumn(prefix + "request", F.regexp_extract(raw, r"^\S+ (\S+)", 1))
-        .withColumn(
-            prefix + "httpversion",
-            # the conf's rewrite: subst("^HTTP/(.*)$", "$1")
-            F.regexp_replace(F.regexp_extract(raw, r"^\S+ \S+ (\S+)$", 1), "^HTTP/", ""),
-        )
-        .withColumn(prefix + "response", nullable(g(8)).cast("int"))
-        .withColumn(
-            prefix + "bytes",
-            F.when(g(9) == "-", F.lit(None).cast("long")).otherwise(
-                nullable(g(9)).cast("long")
-            ),
-        )
-        .withColumn(prefix + "referrer", nullable(g(10)))
-        .withColumn(prefix + "agent", nullable(g(11)))
-        .drop("_ag")
-    )
+    return _parse_once(df, col, _APACHE_RE, 11, {
+        prefix + "vhost": nullable(g(1)),
+        prefix + "port": nullable(g(2)).cast("int"),
+        prefix + "clientip": nullable(g(3)),
+        prefix + "ident": nullable(g(4)),
+        prefix + "auth": nullable(g(5)),
+        prefix + "ts": F.try_to_timestamp(nullable(g(6)), F.lit("dd/MMM/yyyy:HH:mm:ss Z")),
+        prefix + "verb": F.regexp_extract(raw, r"^(\S+)", 1),
+        prefix + "request": F.regexp_extract(raw, r"^\S+ (\S+)", 1),
+        # the conf's rewrite: subst("^HTTP/(.*)$", "$1")
+        prefix + "httpversion": F.regexp_replace(
+            F.regexp_extract(raw, r"^\S+ \S+ (\S+)$", 1), "^HTTP/", ""),
+        prefix + "response": nullable(g(8)).cast("int"),
+        prefix + "bytes": F.when(g(9) == "-", F.lit(None).cast("long")).otherwise(
+            nullable(g(9)).cast("long")),
+        prefix + "referrer": nullable(g(10)),
+        prefix + "agent": nullable(g(11)),
+    })
 
 
 # optional '<pri>', optional 'seq: ', optional '*'/'.' (clock not
@@ -124,14 +111,12 @@ def cisco_parser(df: DataFrame, col: str = "raw", prefix: str = "cisco_") -> Dat
     ints too, and tries the reference's timestamp format candidates
     in order (first parse wins, like date-parser's format list).
 
-    Single-pass staging: the 8-group regex executes once per row
-    (parsers._single_pass_groups), not once per output column."""
-    from syslog_ng_spark.operators.parsers import _single_pass_groups
-
-    df = df.withColumn("_cg", _single_pass_groups(F.col(col), _CISCO_RE, 8))
+    The 8-group regex runs once per row (parsers._parse_once), not
+    once per output column."""
+    from syslog_ng_spark.operators.parsers import _group, _parse_once
 
     def g(i: int) -> Column:
-        return F.coalesce(F.element_at(F.col("_cg"), i), F.lit(""))
+        return F.coalesce(_group(i), F.lit(""))
 
     def nullable(c: Column) -> Column:
         return F.when(c != "", c)
@@ -145,21 +130,18 @@ def cisco_parser(df: DataFrame, col: str = "raw", prefix: str = "cisco_") -> Dat
     )
     fac = nullable(g(4))
     subfac = nullable(g(5))
-    return (
-        df.withColumn(prefix + "pri", pri)
-        .withColumn(prefix + "facility_num", (pri / 8).cast("int"))
-        .withColumn(prefix + "severity_num", pri % 8)
-        .withColumn(prefix + "seqno", nullable(g(2)).cast("long"))
-        .withColumn(prefix + "ts", parsed_ts)
-        .withColumn(
-            prefix + "facility",
-            F.when(subfac.isNotNull(), F.concat_ws("-", fac, subfac)).otherwise(fac),
-        )
-        .withColumn(prefix + "severity", nullable(g(6)).cast("int"))
-        .withColumn(prefix + "mnemonic", nullable(g(7)))
-        .withColumn(prefix + "message", nullable(g(8)))
-        .drop("_cg")
-    )
+    return _parse_once(df, col, _CISCO_RE, 8, {
+        prefix + "pri": pri,
+        prefix + "facility_num": (pri / 8).cast("int"),
+        prefix + "severity_num": pri % 8,
+        prefix + "seqno": nullable(g(2)).cast("long"),
+        prefix + "ts": parsed_ts,
+        prefix + "facility": F.when(
+            subfac.isNotNull(), F.concat_ws("-", fac, subfac)).otherwise(fac),
+        prefix + "severity": nullable(g(6)).cast("int"),
+        prefix + "mnemonic": nullable(g(7)),
+        prefix + "message": nullable(g(8)),
+    })
 
 
 def iptables_parser(
@@ -655,7 +637,7 @@ def snmptrapd_parser(
     full-match scan with per-element key/value regexes, which loses
     because ~2 small regex launches per element cost more than the
     second scan). Header/v1 stay as plain regexp_extracts — at their
-    size the _single_pass_groups rewrite measured slightly slower
+    size the single-regex group-list rewrite measured slightly slower
     (0.36s vs 0.30s per 1M at sf1)."""
     line1 = F.substring_index(F.col(col), "\n", 1)
     has_nl = F.col(col).contains("\n")

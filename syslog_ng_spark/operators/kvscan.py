@@ -88,24 +88,31 @@ def kv_scan_entries(
 
     key_rx = f"^({_KEY_CLASS}+?)[ ]*{s}"
 
-    def entry(tok: Column) -> Column:
-        key = F.regexp_extract(tok, key_rx, 1)
-        raw = F.regexp_replace(tok, key_rx, "")
-        # _skip_initial_spaces + the trailing-space trim of unquoted
-        # values (spaces only — tabs stay, they are not delimiters)
-        lt = F.regexp_replace(raw, "^[ ]+", "")
+    def split_token(tok: Column) -> Column:
+        return F.struct(
+            F.regexp_extract(tok, key_rx, 1).alias("key"),
+            # _skip_initial_spaces + the trailing-space trim of unquoted
+            # values (spaces only — tabs stay, they are not delimiters)
+            F.regexp_replace(F.regexp_replace(tok, key_rx, ""), "^[ ]+", "").alias("lt"),
+        )
+
+    def entry(t: Column) -> Column:
+        lt = t["lt"]
         # strict well-quoted test: a quotation-error token kept raw by
         # the unquoted branch can merely LOOK wrapped in quotes
         quoted = is_well_quoted_token(lt)
         unq_val = F.regexp_replace(lt, "[ ]+$", "")
         dec = decode_c_string(lt.substr(F.lit(2), F.length(lt) - 2))
         return F.struct(
-            key.alias("key"),
+            t["key"].alias("key"),
             F.when(quoted, dec).otherwise(unq_val).alias("value"),
             quoted.alias("was_quoted"),
         )
 
-    return F.transform(toks, entry)
+    # a lambda gets no subexpression elimination, so the key and the
+    # left-trimmed value are bound once per token by a first transform
+    # instead of being re-derived at each of their uses
+    return F.transform(F.transform(toks, split_token), entry)
 
 
 def kv_stray_words(

@@ -15,11 +15,19 @@ Reference semantics:
 Everything is `regexp_extract` / `from_json` / `str_to_map` on the JVM:
 no Python in the row path, so parses vectorize inside whole-stage
 codegen and scale linearly with executors.
+
+The regex-group parsers (the two syslog header parsers here, and the
+apache, cisco and URL parsers elsewhere) share `_parse_once`: one
+regexp_replace per row materialised in a Project, and the output
+fields emitted by a generator. The generator is what makes the regex
+run once per row: a Filter, template or rewrite downstream reads the
+generated columns, which Catalyst cannot substitute back into the
+parse expression, so no reference to a parsed field re-runs it.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -47,17 +55,58 @@ RFC5424_RE = (
 _SEP = "\x1f"
 
 
-def _single_pass_groups(c: Column, regex: str, n_groups: int) -> Column:
-    """Run the parse regex ONCE per row: rewrite the line into a
-    \\x1f-delimited group list, then split. The naive per-field
-    regexp_extract executes the same regex once per output column —
-    ~n_groups× the CPU on the hot ingest path. Non-matching rows yield
-    an empty array (caller nulls the fields)."""
+def _quoted(name: str) -> Column:
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _group(i: int) -> Column:
+    """Capture group i of the line `_parse_once` parses; NULL on a
+    line its regex does not match."""
+    return F.element_at(F.col("_g"), i)
+
+
+def _parse_once(
+    df: DataFrame, col: str, regex: str, n_groups: int, fields: dict[str, Column]
+) -> DataFrame:
+    """Run a parser's anchored regex over `col` once per row and add
+    its output columns: `fields` maps each output name to an
+    expression over `_group(i)`. Columns keep `df`'s order; a field
+    named like an existing column replaces it in place, others are
+    appended.
+
+    The line is rewritten into a \\x1f-delimited group list
+    (regexp_replace) and split, materialised in a Project with no
+    CASE around it. regexp_replace leaves a non-matching line as it
+    is, so a match is told by the array's size, and a second Project
+    nulls any other array: every element_at then reads a NULL array
+    or one of exactly `n_groups` entries, never out of range (ANSI
+    mode raises there). split's limit keeps a separator inside the
+    last group in that group.
+
+    The fields are built in one struct, in a Project (which has
+    subexpression elimination, so a value several fields share is
+    computed once), and leave through a generator,
+    inline(array(struct)), so that what is downstream reads parsed
+    values. Without the generator, predicate pushdown substitutes the
+    parse's aliases into a Filter with no cost check, and Filter
+    codegen has no subexpression elimination, nor does Project
+    codegen hoist a subexpression out of a CASE branch: a parse
+    Project under a three-reference filter re-ran the whole regex 14
+    times per row. A Generate's output cannot be substituted, so the
+    regex runs once."""
     repl = _SEP.join(f"${i}" for i in range(1, n_groups + 1))
-    replaced = F.regexp_replace(c, regex, repl)
-    # regexp_replace leaves non-matching rows untouched → detect by the
-    # absence of the separator (the separator never appears in logs)
-    return F.when(replaced.contains(_SEP), F.split(replaced, _SEP, -1))
+    groups = F.col("_g")
+    staged = df.withColumn(
+        "_g", F.split(F.regexp_replace(F.col(col), regex, repl), _SEP, n_groups)
+    ).withColumn("_g", F.when(F.size(groups) == n_groups, groups))
+    packed = staged.withColumn("_p", F.struct(*[c.alias(n) for n, c in fields.items()]))
+    parsed = packed.select(
+        *[_quoted(c) for c in df.columns if c not in fields], F.inline(F.array(F.col("_p")))
+    )
+    return parsed.select(
+        *[_quoted(c) for c in df.columns],
+        *[_quoted(n) for n in fields if n not in df.columns],
+    )
 
 
 def syslog_parser_3164(df: DataFrame, raw: str = "raw", year: int = 2024,
@@ -71,23 +120,37 @@ def syslog_parser_3164(df: DataFrame, raw: str = "raw", year: int = 2024,
     and user.notice (13) otherwise (syslog-format.c:96); the conf
     front-end sets it from default-facility()/default-severity()
     (cfg-grammar.y msg_format_option)."""
-    staged = df.withColumn("_g", _single_pass_groups(F.col(raw), RFC3164_RE, 6))
-    g = lambda i: F.nullif(F.element_at(F.col("_g"), i), F.lit(""))  # noqa: E731
+    g = lambda i: F.nullif(_group(i), F.lit(""))  # noqa: E731
     pri = F.coalesce(g(1).cast("int"), F.lit(int(default_pri)))
     # normalize space-padded day ('Jan  5') for to_timestamp
     stamp_norm = F.regexp_replace(g(2), "  ", " ")
-    return staged.select(
-        (pri / 8).cast("int").alias("facility"),
-        (pri % 8).cast("int").alias("severity"),
-        F.to_timestamp(
+    fields = {
+        "facility": (pri / 8).cast("int"),
+        "severity": (pri % 8).cast("int"),
+        "ts": F.to_timestamp(
             F.concat(F.lit(str(year) + " "), stamp_norm), "yyyy MMM d HH:mm:ss"
-        ).alias("ts"),
-        g(3).alias("host"),
-        g(4).alias("program"),
-        g(5).cast("int").alias("pid"),
-        F.coalesce(F.element_at(F.col("_g"), 6), F.lit("")).alias("message"),
-        *[F.col(x) for x in df.columns if x != raw],
-    )
+        ),
+        "host": g(3),
+        "program": g(4),
+        "pid": g(5).cast("int"),
+        "message": F.coalesce(_group(6), F.lit("")),
+    }
+    return _parsed_first(_parse_once(df, raw, RFC3164_RE, 6, fields), df, raw, fields)
+
+
+def _sd_pairs(sd: Column) -> Column:
+    """'[id k="v" k2="v2"][id2 ...]' → map('id.k' -> 'v', ...)"""
+    return F.map_from_entries(F.flatten(F.transform(
+        F.regexp_extract_all(sd, F.lit(r"\[([^\]]*)\]"), 1),
+        lambda elem: F.transform(
+            F.regexp_extract_all(elem, F.lit(r'(\S+)="([^"]*)"'), 0),
+            lambda kv: F.struct(
+                F.concat(F.split(elem, " ")[0], F.lit("."),
+                         F.regexp_extract(kv, r'(\S+)="', 1)).alias("key"),
+                F.regexp_extract(kv, r'="([^"]*)"', 1).alias("value"),
+            ),
+        ),
+    )))
 
 
 def syslog_parser_5424(df: DataFrame, raw: str = "raw",
@@ -97,35 +160,32 @@ def syslog_parser_5424(df: DataFrame, raw: str = "raw",
     .SDATA.sdid.param name-value pairs). A line whose <PRI> is absent
     (parse failure) takes ``default_pri`` — log_msg_parse_pri's
     fallback (syslog-format.c:96, user.notice unless configured)."""
-    staged = df.withColumn("_g", _single_pass_groups(F.col(raw), RFC5424_RE, 9)).withColumn(
-        "_sd", F.element_at(F.col("_g"), 8)
-    )
-    g = lambda i: F.nullif(F.element_at(F.col("_g"), i), F.lit("-"))  # noqa: E731
+    g = lambda i: F.nullif(_group(i), F.lit("-"))  # noqa: E731
     pri = F.coalesce(g(1).cast("int"), F.lit(int(default_pri)))
-    # '[id k="v" k2="v2"][id2 ...]' → map('id.k' -> 'v', ...)
-    pairs = F.expr(
-        "map_from_entries(flatten(transform("
-        "  regexp_extract_all(_sd, r'\\[([^\\]]*)\\]', 1),"
-        "  elem -> transform("
-        "    regexp_extract_all(elem, r'(\\S+)=\"([^\"]*)\"', 0),"
-        "    kv -> struct("
-        "      concat(split(elem, ' ')[0], '.', regexp_extract(kv, r'(\\S+)=\"', 1)) as key,"
-        "      regexp_extract(kv, r'=\"([^\"]*)\"', 1) as value)))))"
-    )
-    return staged.select(
-        (pri / 8).cast("int").alias("facility"),
-        (pri % 8).cast("int").alias("severity"),
-        g(2).cast("int").alias("version"),
-        F.to_timestamp(g(3)).alias("ts"),
-        g(4).alias("host"),
-        g(5).alias("program"),
-        g(6).cast("int").alias("pid"),
-        g(7).alias("msgid"),
-        F.when(F.col("_sd") == "-", F.create_map().cast("map<string,string>"))
-        .otherwise(pairs)
-        .alias("sdata"),
-        F.coalesce(F.element_at(F.col("_g"), 9), F.lit("")).alias("message"),
-        *[F.col(x) for x in df.columns if x != raw],
+    sd = _group(8)
+    fields = {
+        "facility": (pri / 8).cast("int"),
+        "severity": (pri % 8).cast("int"),
+        "version": g(2).cast("int"),
+        "ts": F.to_timestamp(g(3)),
+        "host": g(4),
+        "program": g(5),
+        "pid": g(6).cast("int"),
+        "msgid": g(7),
+        "sdata": F.when(sd == "-", F.create_map().cast("map<string,string>"))
+        .otherwise(_sd_pairs(sd)),
+        "message": F.coalesce(_group(9), F.lit("")),
+    }
+    return _parsed_first(_parse_once(df, raw, RFC5424_RE, 9, fields), df, raw, fields)
+
+
+def _parsed_first(parsed: DataFrame, df: DataFrame, raw: str,
+                  names: Iterable[str]) -> DataFrame:
+    """The syslog parsers' column order: the parsed fields `names`,
+    then `df`'s other columns without the raw line."""
+    return parsed.select(
+        *[_quoted(c) for c in names],
+        *[_quoted(c) for c in df.columns if c != raw and c not in names],
     )
 
 

@@ -64,19 +64,16 @@ def url_normalize(
     parse (domain_rollup uses it — a separate url_host call would
     re-run the URL regex).
 
-    The URL regex runs ONCE per row (parsers._single_pass_groups):
-    the naive per-group regexp_extract ran it 6x; with the
-    registered_domain let-binding fix the end-to-end gate measured
-    23.7s -> 9.5s for 10M URLs at sf10 (2.5x)."""
-    from syslog_ng_spark.operators.parsers import _single_pass_groups
-
-    u = F.col(col)
-    staged = df.withColumn("_ug", _single_pass_groups(u, URL_RE, 5))
-    groups = F.col("_ug")
+    The URL regex runs once per row (parsers._parse_once): the naive
+    per-group regexp_extract ran it 6x; with the registered_domain
+    let-binding fix the end-to-end gate measured 23.7s -> 9.5s for
+    10M URLs at sf10 (2.5x)."""
+    from syslog_ng_spark.operators.parsers import _group, _parse_once
 
     def g(i: int) -> Column:
-        return F.coalesce(F.element_at(groups, i), F.lit(""))
+        return F.coalesce(_group(i), F.lit(""))
 
+    matched = _group(1).isNotNull()
     scheme = F.lower(g(1))
     host = F.lower(g(2))
     port = g(3)
@@ -97,10 +94,10 @@ def url_normalize(
         path,
         F.when(query != "", F.concat(F.lit("?"), query)).otherwise(F.lit("")),
     )
-    out = staged.withColumn(target, F.when(groups.isNotNull(), rebuilt))
+    fields = {target: F.when(matched, rebuilt)}
     if host_target:
-        out = out.withColumn(host_target, F.when(groups.isNotNull(), host))
-    return out.drop("_ug")
+        fields[host_target] = F.when(matched, host)
+    return _parse_once(df, col, URL_RE, 5, fields)
 
 
 def registered_domain(host: Column) -> Column:

@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from syslog_ng_spark.operators.parsers import (
     csv_parser,
@@ -14,6 +16,8 @@ from syslog_ng_spark.operators.parsers import (
     kv_parser,
     kv_parser_quoted,
     linux_audit_parser,
+    RFC3164_RE,
+    RFC5424_RE,
     pattern_parser,
     syslog_parser_3164,
     syslog_parser_5424,
@@ -47,6 +51,19 @@ def test_3164_padded_day_no_pri_no_pid(spark):
     assert row.pid is None
     assert row.ts == datetime.datetime(2024, 1, 5, 3, 4, 5)
 
+
+
+def test_3164_fields_replace_existing_columns(spark):
+    """syslog-parser() on a frame that already carries parsed columns
+    (a no-parse source's MESSAGE) overwrites them instead of adding
+    a second column of the same name."""
+    df = spark.createDataFrame(
+        [("<13>Jan  5 03:04:05 web-01 app: hi", "old", "x")],
+        "raw string, message string, tag string")
+    out = syslog_parser_3164(df, year=2024)
+    assert out.columns == ["facility", "severity", "ts", "host", "program", "pid",
+                           "message", "tag"]
+    assert out.collect()[0].message == "hi"
 
 def test_5424_full(spark):
     raw = (
@@ -240,3 +257,108 @@ def test_journal_export_parser(spark):
     assert b.program == "cron"  # _COMM fallback
     assert b.facility is None
     assert ".journald.BINARYISH" not in b.sdata  # no '=' -> skipped
+
+
+# ---------------------------------------------------------------------------
+# parse once: a filter, template or rewrite over parsed fields must not
+# re-run the header regex (pushdown would substitute a parse Project's
+# expressions into every downstream reference)
+# ---------------------------------------------------------------------------
+
+_FILTERED_CONF = """
+source s_in {{ file("{src}"{flags}); }};
+filter f_keep {{ level(info..emerg) and not facility(cron) and host("web")
+                 and message("GET"); }};
+rewrite r_mask {{ subst("secret=\\\\S+", "secret=***", value("MESSAGE")); }};
+destination d_out {{ file("{out}" template("$ISODATE $HOST $PROGRAM $MSG\\n")); }};
+log {{ source(s_in); filter(f_keep); rewrite(r_mask); destination(d_out); }};
+"""
+
+
+def _regex_runs(df, regex):
+    """How many times `regex` appears in the executed plan: one per
+    evaluation site."""
+    return df._jdf.queryExecution().executedPlan().toString().count(regex)
+
+
+def _written(spark, tmp_path, lines, flags=""):
+    """The frame the conf's file() destination renders."""
+    from syslog_ng_spark import config
+    from syslog_ng_spark.template import template_format
+
+    (tmp_path / "in.log").write_text("\n".join(lines) + "\n")
+    conf = config.parse_conf(_FILTERED_CONF.format(
+        src=tmp_path / "in.log", out=tmp_path / "out", flags=flags))
+    (spec,) = config.compile_conf(conf)
+    dest = spec["destinations"][0]
+    return template_format(config.build_pipeline(spark, spec),
+                           dest["template"].rstrip("\n"), target="rendered",
+                           templates=spec.get("templates"))
+
+
+def test_3164_source_parses_once_under_filters(spark, tmp_path):
+    lines = [
+        "<14>Jan  5 03:04:05 web-1 nginx[7]: GET / secret=abc",
+        "<78>Jan  5 03:04:06 web-1 cron[8]: GET /cron",
+        "<15>Jan  5 03:04:07 web-2 nginx[9]: GET /debug",
+        "totally not syslog",
+    ]
+    out = _written(spark, tmp_path, lines)
+    assert _regex_runs(out, RFC3164_RE) == 1
+    assert [r.rendered for r in out.collect()] == [
+        "2024-01-05T03:04:05+00:00 web-1 nginx GET / secret=***"]
+
+
+def test_5424_source_parses_once_under_filters(spark, tmp_path):
+    lines = [
+        "<14>1 2024-01-02T03:04:05Z web-1 nginx 7 - - GET /a",
+        "<78>1 2024-01-02T03:04:06Z web-1 cron 8 - - GET /cron",
+    ]
+    out = _written(spark, tmp_path, lines, flags=" flags(syslog-protocol)")
+    assert _regex_runs(out, RFC5424_RE) == 1
+    assert [r.rendered for r in out.collect()] == [
+        "2024-01-02T03:04:05+00:00 web-1 nginx GET /a"]
+
+
+def test_parse_syslog_step_parses_once_under_filters(spark, tmp_path):
+    from syslog_ng_spark import config
+
+    (tmp_path / "in.log").write_text(
+        "<11>Jan  5 03:04:05 web-01 app[77]: disk failure\n"
+        "<30>Jan  5 03:04:06 web-02 cron[12]: job ok\n")
+    out = config.build_pipeline(spark, {
+        "source": {"kind": "file", "path": str(tmp_path / "in.log")},
+        "steps": [{"op": "parse-syslog", "year": 2024},
+                  {"op": "filter-severity", "max": "err"},
+                  {"op": "filter-facility", "facilities": ["user"]},
+                  {"op": "filter-match", "column": "host", "pattern": "web"}],
+    })
+    assert _regex_runs(out, RFC3164_RE) == 1
+    assert [(r.host, r.pid) for r in out.collect()] == [("web-01", 77)]
+
+
+@pytest.mark.parametrize("parser", ["apache", "cisco", "url"])
+def test_app_parsers_parse_once_under_a_filter(spark, parser):
+    from syslog_ng_spark.operators import app_parsers, urltools
+
+    if parser == "apache":
+        df = spark.createDataFrame(
+            [('127.0.0.1 - frank [10/Oct/2000:13:55:36 -0700] "GET / HTTP/1.0" 200 1',)],
+            "message string")
+        out = app_parsers.apache_accesslog_parser(df, "message").where(
+            (F.col("apache_response") == 200) & F.col("apache_clientip").isNotNull())
+        regex = app_parsers._APACHE_RE
+    elif parser == "cisco":
+        df = spark.createDataFrame(
+            [("%LINK-3-UPDOWN: Interface FastEthernet0/1, changed state to down",)],
+            "raw string")
+        out = app_parsers.cisco_parser(df, "raw").where(
+            (F.col("cisco_severity") <= 3) & (F.col("cisco_mnemonic") == "UPDOWN"))
+        regex = app_parsers._CISCO_RE
+    else:
+        df = spark.createDataFrame([("HTTP://Example.com:80/a?utm_x=1",)], "url string")
+        out = urltools.url_normalize(df, host_target="h").where(
+            F.col("url_norm").startswith("http") & (F.col("h") == "example.com"))
+        regex = urltools.URL_RE
+    assert _regex_runs(out, regex) == 1
+    assert out.count() == 1
