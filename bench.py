@@ -5,6 +5,11 @@ transparency line first, then the contract line (min-of-N timings,
 regression flags, loadavg) LAST so a stdout tail-truncating collector
 always keeps it.
 
+Usage: `python bench.py` runs every catalog query and writes the full
+result to BENCH_LOCAL_FULL.json; `python bench.py q1 q2 ...` runs only
+the named queries, same min-of-N and contract line, for a before/after
+A/B, and leaves BENCH_LOCAL_FULL.json alone.
+
 Each query is materialized through the noop sink so every column is
 computed (a bare .count() would let Catalyst prune the projection and
 understate the work).
@@ -222,6 +227,10 @@ def cpu_probe() -> float:
 
 
 def main() -> None:
+    subset = sys.argv[1:]
+    unknown = [q for q in subset if q not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown catalog queries: {unknown}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     loadavg_start = os.getloadavg()
@@ -235,7 +244,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     first_exec: dict[str, float] = {}
-    for name in BENCH_QUERIES:
+    for name in subset or BENCH_QUERIES:
         runs = []
         for _ in range(N_RUNS):
             t0 = time.perf_counter()
@@ -311,11 +320,12 @@ def main() -> None:
     # line goes first on stdout, and the LAST line is a contract line
     # hard-capped under the tail window — headline numbers + the
     # slowest queries that fit, with a pointer to the full file.
-    full = dict(out)
-    full["queries_first_exec"] = first_exec
-    (Path(__file__).resolve().parent / "BENCH_LOCAL_FULL.json").write_text(
-        json.dumps(full, indent=1) + "\n"
-    )
+    if not subset:
+        full = dict(out)
+        full["queries_first_exec"] = first_exec
+        (Path(__file__).resolve().parent / "BENCH_LOCAL_FULL.json").write_text(
+            json.dumps(full, indent=1) + "\n"
+        )
     print(
         json.dumps(
             {
@@ -326,7 +336,10 @@ def main() -> None:
             }
         )
     )
-    print(json.dumps(_capped_contract(out), separators=(",", ":")))
+    contract = _capped_contract(out)
+    if subset:
+        contract["full_results"] = None  # a subset run leaves the file alone
+    print(json.dumps(contract, separators=(",", ":")))
 
 
 def _capped_contract(out: dict, limit: int = 1900) -> dict:

@@ -2375,8 +2375,7 @@ _CORPUS_CTES = [
 def _ivf_assign_cte(cents: str, name: str) -> str:
     """CTE assigning each corpus row to its nearest centroid in
     `cents` — the SQL mirror of similarity.ivf_assign (9-digit score
-    rounding, ties toward the larger cell index = Spark's
-    array_max(struct(s, i)) semantics)."""
+    rounding, ties toward the larger cell index)."""
     return f"""{name} AS (
   SELECT vec_id, v, cid FROM (
     SELECT c.vec_id, c.v, s.cid,
@@ -2415,8 +2414,8 @@ def _ivf_ctes(k: int = 16, iters: int = 2, nprobe: int = 4):
     """Shared CTE builder for the IVF oracles: md5-hash seed
     selection, unrolled Lloyd rounds, probe choice, final cell
     assignment (`a_final`). Assumes `corpus` and `qv` are defined by
-    the caller. Ties broken toward the larger cell index (Spark's
-    array_max(struct(s, i)) semantics)."""
+    the caller. Ties broken toward the larger cell index, as in
+    similarity.ivf_assign."""
 
     assign = _ivf_assign_cte
 
@@ -2452,7 +2451,7 @@ def _ivf_sql(k: int = 16, iters: int = 2, nprobe: int = 4, topk: int = 10) -> st
     hash, every computed score/centroid rounded to 9 digits (FP sum
     order differs across engines by ~1e-14; rounding pins the argmax
     and cell boundaries), ties broken toward the larger cell index
-    (Spark's array_max(struct(s, i)) semantics)."""
+    (similarity.ivf_assign's tie-break)."""
     ctes = _CORPUS_CTES + _ivf_ctes(k, iters, nprobe)
     return (
         "WITH "
@@ -7095,42 +7094,22 @@ GROUP BY d.doc_id"""
 )
 
 
+@register("bpe_segment_pandas", _BPE_SEGMENT_SQL)
 @register("bpe_segment", _BPE_SEGMENT_SQL)
 def bpe_segment_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE segmentation (bpe.bpe_segment): the trained merge list
-    compiles into ONE chained-replace column expression — the whole
-    tokenizer runs inside the scan stage, no UDF, no join, so at
-    100 TB it costs exactly one corpus pass. The oracle instead joins
-    each word to its final training-profile segmentation (after N
-    merges a word's tokenization IS its profile entry) — two
+    """BPE segmentation (bpe.bpe_segment): the rank-priority encoder in
+    one Arrow pass with a per-partition word memo, flat in merge count.
+    Both keys, `bpe_segment` and `bpe_segment_pandas`, run this one
+    kernel and share one oracle. The oracle instead joins each word to
+    its final training-profile segmentation (after N merges a word's
+    tokenization IS its profile entry) — two
     independent routes to the same answer, so the gate would catch a
-    replace-order bug that a shared-implementation echo could not."""
+    merge-order bug that a shared-implementation echo could not."""
     from syslog_ng_spark.operators.bpe import bpe_segment, bpe_train
 
     docs = rebalance(T(spark, sf_dir, "documents"))
     merges = bpe_train(docs, "text", n_merges=_BPE_MERGES)
     seg = bpe_segment(docs, "text", merges)
-    return seg.where(F.size("bpe") > 0).select(
-        "doc_id",
-        F.size("bpe").cast("long").alias("n_bpe"),
-        F.array_join("bpe", " ").alias("bpe_str"),
-    )
-
-
-@register("bpe_segment_pandas", _BPE_SEGMENT_SQL)
-def bpe_segment_pandas_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE segmentation, Arrow kernel (bpe.bpe_segment kernel='pandas'):
-    the rank-priority encoder in a mapInPandas batch — the production
-    kernel past the expression kernel's janino ceiling (~100 merges;
-    real vocabs are ~30k). Exact parity with the expr kernel is the
-    equivalence argument in bpe._segment_word_ranked, so this gate
-    reuses the bpe_segment oracle VERBATIM — same training replay,
-    same word-profile join."""
-    from syslog_ng_spark.operators.bpe import bpe_segment, bpe_train
-
-    docs = rebalance(T(spark, sf_dir, "documents"))
-    merges = bpe_train(docs, "text", n_merges=_BPE_MERGES)
-    seg = bpe_segment(docs, "text", merges, kernel="pandas")
     return seg.where(F.size("bpe") > 0).select(
         "doc_id",
         F.size("bpe").cast("long").alias("n_bpe"),
@@ -7680,51 +7659,26 @@ GROUP BY doc_id"""
 )
 
 
+@register("bpe_segment_ids", _BPE_IDS_SQL)
 @register("bpe_segment_ids_pandas", _BPE_IDS_SQL)
-def bpe_segment_ids_pandas_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-ID encoding, PRODUCTION kernel (bpe.bpe_segment_ids
-    kernel='pandas'): ids emitted straight through the per-partition
-    word memo — one Arrow pass, no joins, merge-count-flat (the path a
-    real ~30k-merge vocabulary uses). Reuses the bpe_segment_ids
-    oracle verbatim — the expr and pandas kernels are two independent
-    routes (chained literal replaces + map lookup vs the rank-priority
-    encoder), so the shared SQL replay gates BOTH against DuckDB.
-    Registered as its own catalog query (r9) so the production path is
-    benched, floored, and drift-watched like bpe_segment_pandas is —
-    not just the gate-scale expr kernel."""
+def bpe_segment_ids_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-ID encoding (bpe.bpe_segment_ids): the int sequences a
+    training loader consumes — alphabet ids in binary string order,
+    then merge tokens in rank order — emitted straight through
+    bpe_segment's word memo in one Arrow pass, no joins. Both keys,
+    `bpe_segment_ids` and `bpe_segment_ids_pandas`, run this one kernel
+    and share one oracle. The oracle
+    rebuilds the identical vocabulary from the replayed training CTEs
+    (alphabet from the p0 profile, merge tokens from the m{{r}} argmax
+    rows) and joins it per token."""
     from syslog_ng_spark.operators.bpe import bpe_segment_ids, bpe_train_and_vocab
 
     docs = rebalance(T(spark, sf_dir, "documents"))
-    # merges + vocab from ONE word-profile pass (r15): the separate
-    # bpe_vocab call re-ran the corpus aggregate for a table that is a
+    # merges + vocab from ONE word-profile pass: a separate bpe_vocab
+    # call would re-run the corpus aggregate for a table that is a
     # pure function of the profile bpe_train already collected
     merges, vocab = bpe_train_and_vocab(docs, "text", n_merges=_BPE_MERGES)
-    out = bpe_segment_ids(docs, "text", merges, kernel="pandas", vocab=vocab)
-    return out.where(F.size("ids") > 0).select(
-        "doc_id",
-        F.array_join(F.transform(F.col("ids"), lambda i: i.cast("string")), " ").alias("ids_str"),
-        F.size("ids").cast("long").alias("n_ids"),
-    )
-
-
-@register("bpe_segment_ids", _BPE_IDS_SQL)
-def bpe_segment_ids_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-ID encoding (bpe.bpe_vocab + bpe_segment_ids): the int
-    sequences a training loader consumes — alphabet ids in binary
-    string order, then merge tokens in rank order. Uses the expr
-    kernel + literal token→id map so the whole path is
-    engine-replayable; the oracle rebuilds the identical vocabulary
-    from the replayed training CTEs (alphabet from the p0 profile,
-    merge tokens from the m{{r}} argmax rows) and joins it per token.
-    Production uses kernel='pandas' (ids emitted through the word
-    memo, parity-pytested)."""
-    from syslog_ng_spark.operators.bpe import bpe_segment_ids, bpe_train_and_vocab
-
-    docs = rebalance(T(spark, sf_dir, "documents"))
-    # one word-profile pass for merges + vocab (r15, see the pandas
-    # variant above)
-    merges, vocab = bpe_train_and_vocab(docs, "text", n_merges=_BPE_MERGES)
-    out = bpe_segment_ids(docs, "text", merges, kernel="expr", vocab=vocab)
+    out = bpe_segment_ids(docs, "text", merges, vocab=vocab)
     return out.where(F.size("ids") > 0).select(
         "doc_id",
         F.array_join(F.transform(F.col("ids"), lambda i: i.cast("string")), " ").alias("ids_str"),

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from syslog_ng_spark.util import collect_at_most
+
 # end-of-word marker, a symbol that whitespace tokenization can never
 # produce (words are split on whitespace, so they contain none)
 EOW = "▁"
@@ -60,7 +62,7 @@ def _apply_merge(sym: Column, a: str, b: str) -> Column:
     instead of regexp_replace() — both replace left-to-right
     non-overlapping occurrences of a metacharacter-free literal, so
     the result string is identical, without the regex engine on every
-    word x merge (measured ~2x on the expr-kernel segment gates)."""
+    word x merge (measured ~2x when this also drove segmentation)."""
     doubled = F.concat(F.lit(" "), F.replace(sym, F.lit(" "), F.lit("  ")), F.lit(" "))
     merged = F.replace(doubled, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} "))
     return F.trim(F.replace(merged, F.lit("  "), F.lit(" ")))
@@ -171,6 +173,18 @@ def _train_merges_local(
     return merges
 
 
+def _train_local(
+    df: DataFrame, text_col: str, n_merges: int, lowercase: bool, bound: int
+) -> tuple[list[tuple[int, str, str]], list[tuple[str, int]]] | None:
+    """bpe_train's driver-local path: (merges, word profile) when the
+    word profile fits `bound` rows, else None."""
+    rows = collect_at_most(_word_profile(df, text_col, lowercase), bound)
+    if rows is None:
+        return None
+    wc = [(r["word"], r["cnt"]) for r in rows]
+    return _train_merges_local(wc, n_merges), wc
+
+
 def bpe_train(
     df: DataFrame,
     text_col: str,
@@ -212,7 +226,7 @@ def bpe_train(
     Python iterates strings by code point, and Spark's regexp '(.)'
     does too (java.util.regex treats a surrogate pair as one match),
     so an astral-plane character (emoji, musical symbols) is ONE
-    symbol in both kernels. Measured, not assumed: the parity tests
+    symbol on both paths. Measured, not assumed: the parity tests
     cover supplementary-plane corpora explicitly
     (tests/test_bpe.py::test_astral_plane_*).
     """
@@ -220,12 +234,9 @@ def bpe_train(
         raise ValueError(f"n_merges must be positive, got {n_merges}")
     use_driver = True if driver_profile == "auto" else bool(driver_profile)
     if use_driver:
-        wp = _word_profile(df, text_col, lowercase)
-        rows = wp.limit(max_driver_profile_rows + 1).collect()
-        if len(rows) <= max_driver_profile_rows:
-            return _train_merges_local(
-                [(r["word"], r["cnt"]) for r in rows], n_merges
-            )
+        local = _train_local(df, text_col, n_merges, lowercase, max_driver_profile_rows)
+        if local is not None:
+            return local[0]
         if driver_profile is True:
             raise ValueError(
                 f"word profile exceeds max_driver_profile_rows="
@@ -292,8 +303,7 @@ def bpe_train_and_vocab(
     order (Python sorted == Spark UTF8String order — UTF-8 preserves
     code-point order), then one token per merge in rank order with
     id = |alphabet| + rank - 1, lowest id winning duplicate surface
-    forms (bpe_vocab's documented policy, here: first writer wins
-    because ids only grow).
+    forms (bpe_vocab's documented policy; see _local_vocab).
 
     Past the collect bound both halves fall back to the distributed
     paths unchanged (the 100 TB shape: bpe_vocab's profile aggregate
@@ -301,17 +311,10 @@ def bpe_train_and_vocab(
     Parity with bpe_vocab(df).collect() is pytest-pinned."""
     if n_merges <= 0:
         raise ValueError(f"n_merges must be positive, got {n_merges}")
-    wp = _word_profile(df, text_col, lowercase)
-    rows = wp.limit(max_driver_profile_rows + 1).collect()
-    if len(rows) <= max_driver_profile_rows:
-        wc = [(r["word"], r["cnt"]) for r in rows]
-        merges = _train_merges_local(wc, n_merges)
-        alpha = sorted({ch for w, _ in wc for ch in w} | {EOW})
-        vocab = {t: i for i, t in enumerate(alpha)}
-        n_alpha = len(alpha)
-        for rank, a, b in merges:
-            vocab.setdefault(a + b, n_alpha + rank - 1)
-        return merges, vocab
+    local = _train_local(df, text_col, n_merges, lowercase, max_driver_profile_rows)
+    if local is not None:
+        merges, wc = local
+        return merges, _local_vocab(wc, merges)
     merges = bpe_train(df, text_col, n_merges, lowercase, driver_profile=False)
     vocab = {
         r["token"]: r["id"]
@@ -320,17 +323,30 @@ def bpe_train_and_vocab(
     return merges, vocab
 
 
+def _local_vocab(
+    word_counts: list[tuple[str, int]], merges: list[tuple[int, str, str]]
+) -> dict[str, int]:
+    """bpe_vocab over a collected word profile. Merges are visited in
+    rank order whatever order the caller passes them in, so
+    setdefault keeps the LOWEST id of a duplicate surface form."""
+    alpha = sorted({ch for w, _ in word_counts for ch in w} | {EOW})
+    vocab = {t: i for i, t in enumerate(alpha)}
+    for rank, a, b in sorted(merges):
+        vocab.setdefault(a + b, len(alpha) + rank - 1)
+    return vocab
+
+
 def _segment_word_ranked(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     """Standard rank-priority BPE application (the GPT-2 encoder
     algorithm): repeatedly merge the lowest-rank adjacent pair,
     left-to-right non-overlapping, until no learned pair remains.
 
     For a merge list produced by genuine BPE training this is
-    EQUIVALENT to the expression kernel's one-replace-pass-per-merge-
-    in-rank-order: merge j's components exist before merge k>j is
-    learned, so applying k can never create a new adjacency for j
-    (the only new symbol, a_k+b_k, postdates j) — hence rank order ==
-    priority order. The parity pytest checks this on trained lists
+    EQUIVALENT to one left-to-right replace pass per merge in rank
+    order (the training loop's _apply_merge): merge j's components
+    exist before merge k>j is learned, so applying k can never create
+    a new adjacency for j (the only new symbol, a_k+b_k, postdates j)
+    — hence rank order == priority order. The parity pytest checks this on trained lists
     AND on a 500-deep chain list."""
     syms = list(word) + [EOW]
     while len(syms) > 1:
@@ -356,77 +372,68 @@ def _segment_word_ranked(word: str, ranks: dict[tuple[str, str], int]) -> list[s
     return syms
 
 
+def _segment_frame(
+    df: DataFrame,
+    text_col: str,
+    merges: list[tuple[int, str, str]],
+    lowercase: bool,
+    out_col: str,
+    elem_type,
+    vocab: dict[str, int] | None = None,
+) -> DataFrame:
+    """`df` plus an array column `out_col`: each row's words segmented
+    by the rank-priority encoder, mapped through `vocab` when given
+    (tokens outside it become NULL)."""
+    import re
+
+    from pyspark.sql.types import ArrayType, StructField, StructType
+
+    ranks = {(a, b): r for r, a, b in merges}
+    out_schema = StructType(list(df.schema.fields) + [StructField(out_col, ArrayType(elem_type))])
+    ws = re.compile(r"\s+")
+
+    def run(batches):
+        memo: dict[str, list] = {}
+        for pdf in batches:
+            res = []
+            for txt in pdf[text_col]:
+                if txt is None:
+                    res.append(None)
+                    continue
+                t = txt.lower() if lowercase else txt
+                toks: list = []
+                for w in ws.split(t):
+                    if not w:
+                        continue
+                    got = memo.get(w)
+                    if got is None:
+                        got = _segment_word_ranked(w, ranks)
+                        if vocab is not None:
+                            got = [vocab.get(tok) for tok in got]
+                        memo[w] = got
+                    toks.extend(got)
+                res.append(toks)
+            yield pdf.assign(**{out_col: res})
+
+    return df.mapInPandas(run, out_schema)
+
+
 def bpe_segment(df: DataFrame, text_col: str, merges: list[tuple[int, str, str]],
-                lowercase: bool = True, out_col: str = "bpe",
-                kernel: str = "expr") -> DataFrame:
+                lowercase: bool = True, out_col: str = "bpe") -> DataFrame:
     """Apply a trained merge list to a corpus: each row's text becomes
     an array of subword tokens.
 
-    kernel='expr' (default): merges are applied in rank order as
-    literal replaces chained into ONE column expression — the whole
-    tokenizer compiles into the scan stage, no UDF, no join. The right
-    plan at oracle scale (8 merges), but the expression tree grows one
-    replace PER MERGE: the repo's own janino measurements (SCALE.md
-    Addendum 5 §3 — Catalyst argmax blow-up past a few dozen terms)
-    rule it out for a real ~30k-merge vocabulary.
+    Arrow-batched mapInPandas running the standard rank-priority
+    encoder with a per-partition word memo — Zipf makes the
+    distinct-word working set tiny relative to rows, so each distinct
+    word is segmented once per partition, O(len·pairs) in Python but
+    amortized across every repeat. Cost is flat in merge count, so it
+    serves a real ~30k-merge vocabulary; an expression tree with one
+    replace per merge hits the janino wall past a few dozen merges
+    (SCALE.md Addendum 5 §3)."""
+    from pyspark.sql.types import StringType
 
-    kernel='pandas': Arrow-batched mapInPandas running the standard
-    rank-priority encoder with a per-partition word memo — Zipf makes
-    the distinct-word working set tiny relative to rows, so each
-    distinct word is segmented once per partition, O(len·pairs) in
-    Python but amortized across every repeat. Identical output
-    (parity-tested, incl. a 500-merge chain list); the same precedent
-    as similarity.ivf_assign_pandas for when the expression kernel's
-    compile cost crosses over. At 100 TB with a 30k-merge tokenizer
-    this IS the production kernel."""
-    if kernel == "pandas":
-        import re as _re
-
-        from pyspark.sql.types import ArrayType, StringType, StructField, StructType
-
-        ranks = {(a, b): r for r, a, b in merges}
-        out_schema = StructType(
-            list(df.schema.fields) + [StructField(out_col, ArrayType(StringType()))]
-        )
-        ws = _re.compile(r"\s+")
-
-        def run(batches):
-            memo: dict[str, list[str]] = {}
-            for pdf in batches:
-                col = pdf[text_col]
-                res = []
-                for txt in col:
-                    if txt is None:
-                        res.append(None)
-                        continue
-                    t = txt.lower() if lowercase else txt
-                    toks: list[str] = []
-                    for w in ws.split(t):
-                        if not w:
-                            continue
-                        got = memo.get(w)
-                        if got is None:
-                            got = _segment_word_ranked(w, ranks)
-                            memo[w] = got
-                        toks.extend(got)
-                    res.append(toks)
-                pdf = pdf.copy()
-                pdf[out_col] = res
-                yield pdf
-
-        return df.mapInPandas(run, out_schema)
-    if kernel != "expr":
-        raise ValueError(f"unknown bpe_segment kernel {kernel!r}")
-    txt = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    words = F.filter(F.split(txt, r"\s+"), lambda w: w != "")
-
-    def seg(word: Column) -> Column:
-        sym = _to_symbols(word)
-        for _, a, b in sorted(merges):
-            sym = _apply_merge(sym, a, b)
-        return F.split(sym, " ")
-
-    return df.withColumn(out_col, F.flatten(F.transform(words, seg)))
+    return _segment_frame(df, text_col, merges, lowercase, out_col, StringType())
 
 
 def bpe_vocab(
@@ -445,10 +452,9 @@ def bpe_vocab(
     same token string (('a','bc') and ('ab','c') both produce 'abc'),
     and a merge token can collide with an alphabet symbol. Policy:
     **keep the LOWEST id per token** (first producer wins; ids above
-    it are simply unused). This keeps all three consumers consistent:
-    the pandas kernel's dict, the expr kernel's map literal (which
-    would raise under spark.sql.mapKeyDedupPolicy=EXCEPTION), and the
-    SQL oracle's join (which would fan rows out)."""
+    it are simply unused). This keeps both consumers consistent:
+    bpe_segment_ids' dict and the SQL oracle's join (which would fan
+    rows out)."""
     from pyspark.sql import Window
 
     syms = _word_profile(df, text_col, lowercase).select(
@@ -481,7 +487,6 @@ def bpe_segment_ids(
     merges: list[tuple[int, str, str]],
     lowercase: bool = True,
     out_col: str = "ids",
-    kernel: str = "pandas",
     vocab: dict[str, int] | None = None,
 ) -> DataFrame:
     """Segment AND map to token ids — the int sequence a training
@@ -492,66 +497,15 @@ def bpe_segment_ids(
     training corpus (symbols unseen at training time would otherwise
     silently join the alphabet and shift every merge-token id).
 
-    kernel='pandas' (production): the rank-priority encoder emits ids
-    directly through the per-partition word memo — one Arrow pass, no
-    joins, merge-count-flat.
-    kernel='expr': the chained-replace segmenter plus a literal
-    token→id map lookup — fully engine-replayable (the oracle rebuilds
-    the same vocab in SQL), but the map literal grows with vocab size,
-    so it is the gate-scale path only (same split as bpe_segment).
-    Tokens outside the vocabulary map to NULL in both kernels (unk
+    bpe_segment's kernel emits the ids directly through its
+    per-partition word memo — one Arrow pass, no joins,
+    merge-count-flat. Tokens outside the vocabulary map to NULL (unk
     handling is the loader's policy decision)."""
+    from pyspark.sql.types import LongType
+
     if vocab is None:
         vocab = {
             r["token"]: r["id"]
             for r in bpe_vocab(df, text_col, merges, lowercase).collect()
         }
-    if kernel == "pandas":
-        import re as _re
-
-        from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-        ranks = {(a, b): r for r, a, b in merges}
-        out_schema = StructType(
-            list(df.schema.fields) + [StructField(out_col, ArrayType(LongType()))]
-        )
-        ws = _re.compile(r"\s+")
-
-        def run(batches):
-            memo: dict[str, list] = {}
-            for pdf in batches:
-                res = []
-                for txt in pdf[text_col]:
-                    if txt is None:
-                        res.append(None)
-                        continue
-                    t = txt.lower() if lowercase else txt
-                    ids: list = []
-                    for w in ws.split(t):
-                        if not w:
-                            continue
-                        got = memo.get(w)
-                        if got is None:
-                            got = [
-                                vocab.get(tok)
-                                for tok in _segment_word_ranked(w, ranks)
-                            ]
-                            memo[w] = got
-                        ids.extend(got)
-                    res.append(ids)
-                pdf = pdf.copy()
-                pdf[out_col] = res
-                yield pdf
-
-        return df.mapInPandas(run, out_schema)
-    if kernel != "expr":
-        raise ValueError(f"unknown bpe_segment_ids kernel {kernel!r}")
-    seg = bpe_segment(df, text_col, merges, lowercase, out_col="_bpe", kernel="expr")
-    toks = list(vocab)
-    m = F.map_from_arrays(
-        F.array(*[F.lit(t) for t in toks]),
-        F.array(*[F.lit(vocab[t]).cast("long") for t in toks]),
-    )
-    return seg.withColumn(
-        out_col, F.transform(F.col("_bpe"), lambda t: F.element_at(m, t))
-    ).drop("_bpe")
+    return _segment_frame(df, text_col, merges, lowercase, out_col, LongType(), vocab)

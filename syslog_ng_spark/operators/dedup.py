@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from syslog_ng_spark.util import rebalance, track_cached
+from syslog_ng_spark.util import collect_at_most, rebalance, track_cached
 
 # Mersenne prime 2^31-1: affine minhash stays < 2^62 so the arithmetic
 # never overflows BIGINT in either Spark or DuckDB (DuckDB errors on
@@ -495,12 +495,11 @@ def connected_components(
     Returns (node, cluster_id) for every node that appears in a pair;
     dedup keeps rows where node == cluster_id (cluster canonicals)."""
     if max_driver_edges:
-        rows = (
-            pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-            .limit(max_driver_edges + 1)
-            .collect()
+        rows = collect_at_most(
+            pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")),
+            max_driver_edges,
         )
-        if len(rows) <= max_driver_edges:
+        if rows is not None:
             parent: dict = {}
 
             def find(x):

@@ -123,7 +123,7 @@ def syslog_parser_3164(df: DataFrame, raw: str = "raw", year: int = 2024,
     g = lambda i: F.nullif(_group(i), F.lit(""))  # noqa: E731
     pri = F.coalesce(g(1).cast("int"), F.lit(int(default_pri)))
     # normalize space-padded day ('Jan  5') for to_timestamp
-    stamp_norm = F.regexp_replace(g(2), "  ", " ")
+    stamp_norm = F.replace(g(2), F.lit("  "), F.lit(" "))
     fields = {
         "facility": (pri / 8).cast("int"),
         "severity": (pri % 8).cast("int"),

@@ -4,8 +4,8 @@ Brute-force cosine top-k is the correctness baseline; the scale path
 is LSH bucketing (random-hyperplane signs) so candidate generation is
 linear. Vector math uses JVM array functions (zip_with + aggregate in
 double precision) — deterministic sequential order, reproducible in
-the DuckDB oracle. A numpy Pandas-UDF variant exists for when the
-corpus side is large enough that Arrow-batch matmul wins.
+the DuckDB oracle. IVF cell assignment is an Arrow-batched numpy
+matmul (ivf_assign); cosine_topk_pandas is the matmul top-k variant.
 """
 
 from __future__ import annotations
@@ -26,9 +26,9 @@ def _corpus_dim(df: DataFrame, vec_col: str) -> int:
 
 # --- SQL-text expression builders (r14 optimization) -------------------
 #
-# The k-means/LSH expressions embed hundreds of literals (k centroids x
-# dim components). Building them as Column trees costs one py4j round
-# trip PER OPERATOR — profiled at 1.4-4s per ivf_assign call on the
+# The PQ/LSH expressions embed hundreds of literals (codes x dim
+# components). Building them as Column trees costs one py4j round
+# trip PER OPERATOR — profiled at 1.4-4s per k-way argmax on the
 # driver, dwarfing the 0.5s Spark job it feeds (guide §1/§5: the driver
 # must not be the bottleneck). Rendering the SAME expression as one SQL
 # string and parsing it JVM-side with F.expr is a single round trip.
@@ -58,32 +58,10 @@ def _dot_lit_sql(vec: str, vals: list[float], offset: int = 0) -> str:
     Keep unrolled expressions under ~200 terms: past that the
     generated method exceeds HotSpot's JIT size limit and runs in the
     BYTECODE interpreter — measured 2.2s vs 0.5s per Lloyd-round job
-    for the 16x64-term argmax; _dot_lit_hof_sql is the large-k form."""
+    for the 16x64-term argmax."""
     s = "0.0D"
     for d, v in enumerate(vals):
         s = f"({s} + (CAST(`{vec}`[{offset + d}] AS DOUBLE) * {_dlit(v)}))"
-    return s
-
-
-def _dot_lit_hof_sql(vec: str, vals: list[float]) -> str:
-    """dot(vec, vals) in the original higher-order-function shape
-    (aggregate over zip_with), rendered as SQL text: identical
-    expression tree to dot() — bit-identical values, interpreted
-    evaluation with small hot methods (fast under JIT), and one parse
-    instead of ~70 py4j calls. Used where many dots share one Project
-    (the k-way argmax) and unrolling would blow the method size."""
-    arr = ", ".join(_dlit(v) for v in vals)
-    return (
-        f"aggregate(zip_with(transform(`{vec}`, x -> CAST(x AS DOUBLE)), "
-        f"array({arr}), (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-    )
-
-
-def _dot_cols_sql(a: str, b: str, dim: int) -> str:
-    """Unrolled dot between two vector columns, same fold order."""
-    s = "0.0D"
-    for d in range(dim):
-        s = f"({s} + (CAST(`{a}`[{d}] AS DOUBLE) * CAST(`{b}`[{d}] AS DOUBLE)))"
     return s
 
 
@@ -260,84 +238,55 @@ def ivf_assign(
     target: str = "ivf_cell",
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (IVF coarse
-    quantizer). Centroids are a small python list (broadcast as
-    literals into the plan); assignment is argmax of dot with the
-    normalized centroids — pure Catalyst, no UDF.
+    quantizer): `df` with an int `target` column appended. One
+    Arrow-batched numpy matmul per batch against the normalized
+    centroids; the cost per row is flat in k, where an inlined k-way
+    Catalyst argmax grows its generated code with k (janino compile
+    time dominated the query at k=256).
 
-    r14: the k x dim expression is rendered as ONE SQL string (see the
-    _dot_lit_sql block comment) — same values bit-for-bit, but a single
-    py4j round trip instead of ~1200, and unrolled codegen arithmetic
-    instead of per-row interpreted lambdas."""
+    |v| is constant across centroids, so plain dot against the
+    NORMALIZED centroid has the same argmax as cosine. Centroids are
+    normalized with Python's math.sqrt(sum(x*x)), scores are rounded
+    to 9 digits so the argmax (and thus every cell boundary) is
+    engine-portable — the DuckDB oracle recomputes this assignment —
+    and ties go to the LARGER cell index. A NULL vector gets a NULL
+    cell."""
     import math
 
-    scored = []
-    for i, c in enumerate(centroids):
-        n = math.sqrt(sum(x * x for x in c)) or 1.0
-        normed = [float(x / n) for x in c]
-        # |v| is constant across centroids, so plain dot against the
-        # NORMALIZED centroid has the same argmax as cosine. The score
-        # is rounded to 9 digits so the argmax (and thus every cell
-        # boundary) is engine-portable — the DuckDB oracle recomputes
-        # this assignment bit-for-bit.
-        scored.append(
-            f"named_struct('s', ROUND({_dot_lit_hof_sql(vec_col, normed)}, 9), 'i', {i})"
-        )
-    best = f"array_max(array({', '.join(scored)})).i"
-    return df.withColumn(target, F.expr(best))
-
-
-def ivf_assign_pandas(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    target: str = "ivf_cell",
-) -> DataFrame:
-    """ivf_assign's large-k kernel: one Arrow-batched numpy matmul per
-    partition instead of a k-way unrolled Catalyst argmax. The
-    expression form is ideal up to a few dozen centroids, but its
-    codegen grows with k (k dot products inlined per row) — at k=256
-    janino compile time dominates the query (measured while scaling
-    SemDeDup's cell count with the corpus). Matmul cost is identical
-    per row regardless of how k factors into the expression tree.
-
-    Semantics match ivf_assign exactly (parity-tested): scores are
-    dot(v, centroid/|centroid|) rounded to 9 digits, ties broken
-    toward the LARGER cell index."""
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
-    C = np.asarray(centroids, dtype="float64")
-    norms = np.linalg.norm(C, axis=1)
-    norms[norms == 0.0] = 1.0
-    Cn = (C / norms[:, None]).T  # dim x k
+    norms = np.array([math.sqrt(sum(x * x for x in c)) or 1.0 for c in centroids])
+    cn = (np.asarray(centroids, dtype="float64") / norms[:, None]).T  # dim x k
+    last = cn.shape[1] - 1
+    df = df.drop(target)
+    schema = StructType(list(df.schema.fields) + [StructField(target, IntegerType())])
 
-    def assign(iterator):
-        for pdf in iterator:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            scores = np.round(mat @ Cn, 9)
-            # argmax with ties toward the larger index: reverse, argmax
-            # (first hit = largest original index), map back
-            best = (scores.shape[1] - 1) - np.argmax(scores[:, ::-1], axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col], target: best.astype("int32")})
+    def assign(batches):
+        for pdf in batches:
+            vecs = pdf[vec_col]
+            has = vecs.notna().to_numpy()
+            cell = pd.Series(pd.NA, index=pdf.index, dtype="Int32")
+            if has.any():
+                scores = np.round(np.stack(vecs[has].to_numpy()).astype("float64") @ cn, 9)
+                # argmax with ties toward the larger index: reverse,
+                # argmax (first hit = largest original index), map back
+                cell[has] = last - np.argmax(scores[:, ::-1], axis=1)
+            yield pdf.assign(**{target: cell})
 
-    assigned = df.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"{id_col} long, {target} int"
-    )
-    return df.join(assigned, id_col)
+    return df.mapInPandas(assign, schema)
 
 
 def _collect_small_corpus(
     df: DataFrame, vec_col: str, id_col: str, bound: int
 ) -> list[tuple] | None:
     """The (id, vector) corpus as driver-local Python when it fits
-    `bound` rows, else None. The limit(bound+1) collect PROVES the
-    bound before committing (same pattern as bpe_train's profile and
-    connected_components' edge collect): exactly `bound+1` rows back
-    means the corpus is bigger, and the caller falls back to the
-    distributed path without ever holding an unbounded result."""
-    rows = df.select(F.col(id_col), F.col(vec_col)).limit(bound + 1).collect()
-    if len(rows) > bound:
+    `bound` rows, else None (util.collect_at_most proves the bound)."""
+    from syslog_ng_spark.util import collect_at_most
+
+    rows = collect_at_most(df.select(F.col(id_col), F.col(vec_col)), bound)
+    if rows is None:
         return None
     return [(r[0], [float(x) for x in r[1]]) for r in rows]
 
@@ -360,9 +309,9 @@ def _local_seeds(corpus: list[tuple], k: int) -> list[list[float]]:
 def _ivf_train_local(corpus: list[tuple], k: int, iters: int) -> list[list[float]]:
     """Driver-local Lloyd rounds, numerically aligned with the
     distributed path: centroid normalization uses the identical
-    Python-float math.sqrt/divide that ivf_assign inlines as
-    literals, scores round to 9 digits before the argmax (ties toward
-    the LARGER index, as ivf_assign's array_max + ivf_assign_pandas),
+    Python-float math.sqrt/divide that ivf_assign uses, scores round
+    to 9 digits before the argmax (ties toward the LARGER index, as
+    in ivf_assign),
     and means round to 9 digits (the same round that makes the
     distributed sums engine-portable absorbs numpy's pairwise
     summation order here)."""
@@ -448,7 +397,7 @@ def ivf_train(
     # dim from the seed rows — saves the separate _corpus_dim job
     dim = len(centroids[0])
     for _ in range(iters):
-        assigned = ivf_assign(df, centroids, vec_col, "_cell")
+        assigned = ivf_assign(df.select(vec_col), centroids, vec_col, "_cell")
         sums = assigned.groupBy("_cell").agg(
             *[
                 F.expr(f"SUM(element_at(`{vec_col}`, {d + 1}))").alias(f"s{d}")
@@ -500,7 +449,9 @@ def ivf_topk(
 
     qn = math.sqrt(sum(x * x for x in query_vec)) or 1.0
     probe = probe_cells(query_vec, centroids, nprobe)
-    cells = ivf_assign(corpus, centroids, vec_col, "_cell").where(F.col("_cell").isin(probe))
+    cells = ivf_assign(corpus.select(id_col, vec_col), centroids, vec_col, "_cell").where(
+        F.col("_cell").isin(probe)
+    )
     qd = [float(x) for x in query_vec]
     score = (
         f"ROUND({_dot_lit_sql(vec_col, qd)}"
@@ -519,7 +470,6 @@ def semantic_dedup_pairs(
     threshold: float = 0.45,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign_kernel: str = "expr",
 ) -> DataFrame:
     """SemDeDup-style semantic near-dup pairs (Abbas et al. 2023,
     arXiv:2303.09540): cluster the corpus with the IVF coarse
@@ -528,8 +478,8 @@ def semantic_dedup_pairs(
     quadratic all-pairs verify shrinks to sum(c_i^2) over cell sizes
     (~n^2/k for balanced cells, embarrassingly parallel per cell).
 
-    The shape at 100 TB: ivf_assign is a pure column expression, the
-    pair generation is an equi-join on the cell id (one hash shuffle;
+    The shape at 100 TB: ivf_assign is one Arrow pass per partition,
+    the pair generation is an equi-join on the cell id (one hash shuffle;
     with the corpus written partitioned by cell it's a co-located
     join), and nothing is broadcast. Known tradeoff vs the exact
     blocked join (`cosine_pairs_blocked`): pairs straddling a cell
@@ -539,20 +489,10 @@ def semantic_dedup_pairs(
 
     Scaling law (SCALE.md r5): with FIXED k the within-cell pair count
     is Σc_i² ~ n²/k — quadratic. Holding CELL SIZE constant (k ∝ n)
-    makes it linear; past a few dozen centroids the unrolled argmax
-    expression hits janino compile blow-up, so pass
-    assign_kernel='pandas' (Arrow matmul, identical semantics) for
-    large k.
+    makes it linear; ivf_assign's matmul cost per row is flat in k.
     """
     dim = len(centroids[0])
-    if assign_kernel == "pandas":
-        assigned = ivf_assign_pandas(corpus, centroids, vec_col, id_col, "_cell").select(
-            id_col, vec_col, "_cell"
-        )
-    else:
-        assigned = ivf_assign(corpus, centroids, vec_col, "_cell").select(
-            id_col, vec_col, "_cell"
-        )
+    assigned = ivf_assign(corpus.select(id_col, vec_col), centroids, vec_col, "_cell")
     nrm = F.expr(_norm_sql(vec_col, dim))
     a = assigned.select(
         F.col(id_col).alias("id_a"),
@@ -846,7 +786,9 @@ def ivfpq_topk(
         d = round(sum(a * b for a, b in zip(query_vec, c)) / (qn * cn), 9)
         sims.append((d, i))
     probe = [i for _, i in sorted(sims, reverse=True)[:nprobe]]
-    pruned = ivf_assign(corpus, centroids, vec_col, "_cell").where(F.col("_cell").isin(probe))
+    pruned = ivf_assign(corpus.select(id_col, vec_col), centroids, vec_col, "_cell").where(
+        F.col("_cell").isin(probe)
+    )
     return pq_topk(pruned.drop("_cell"), query_vec, codebooks, k, vec_col, id_col)
 
 
@@ -993,7 +935,6 @@ def hard_negatives(
     neg_lo: float = 0.0,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign_kernel: str = "expr",
     neg_lo_quantile: float | None = None,
     calib_method: str = "exact",
 ) -> DataFrame:
@@ -1017,9 +958,8 @@ def hard_negatives(
 
     Same scaling law as semantic_dedup_pairs (SCALE.md Addendum 5/10):
     FIXED k leaves candidate volume ~n²/k (measured 21.8×/decade at
-    sf10); k ∝ n holds cell size — and the mining — linear, with
-    assign_kernel='pandas' (Arrow matmul) past a few dozen centroids
-    where the unrolled Catalyst argmax hits janino limits.
+    sf10); k ∝ n holds cell size — and the mining — linear, and
+    ivf_assign's matmul cost per row is flat in k.
 
     neg_lo is the production knob that keeps the WINDOW input linear:
     with neg_lo=0 every sub-threshold candidate in the cell rides the
@@ -1035,20 +975,12 @@ def hard_negatives(
     """
     from pyspark.sql import Window
 
-    if assign_kernel == "pandas":
-        # the Arrow assign feeds BOTH join branches and is recomputed
-        # per branch — measured FASTER than persisting it (49.6s vs
-        # 89.1s at sf10/k=256): the cache materialization barrier +
-        # InMemoryTableScan of the vector column costs more than
-        # running the batched matmul twice. Recorded in SCALE.md
-        # Addendum 10 so it isn't "fixed" back.
-        assigned = ivf_assign_pandas(corpus, centroids, vec_col, id_col, "_cell").select(
-            id_col, vec_col, "_cell"
-        )
-    else:
-        assigned = ivf_assign(corpus, centroids, vec_col, "_cell").select(
-            id_col, vec_col, "_cell"
-        )
+    # the Arrow assign feeds BOTH join branches and is recomputed per
+    # branch — measured FASTER than persisting it (49.6s vs 89.1s at
+    # sf10/k=256): the cache materialization barrier + InMemoryTableScan
+    # of the vector column costs more than running the batched matmul
+    # twice. Recorded in SCALE.md Addendum 10 so it isn't "fixed" back.
+    assigned = ivf_assign(corpus.select(id_col, vec_col), centroids, vec_col, "_cell")
     dim = len(centroids[0])
     nrm = F.expr(_norm_sql(vec_col, dim))
     a = assigned.select(

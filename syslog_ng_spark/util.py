@@ -41,6 +41,16 @@ def salted_join(
     return out.drop("_salt")
 
 
+def collect_at_most(df: DataFrame, bound: int) -> list | None:
+    """`df`'s rows on the driver when there are at most `bound` of
+    them, else None. The limit(bound+1) collect proves the bound
+    before committing: getting `bound+1` rows back means the frame is
+    bigger, and the caller takes its distributed path without ever
+    holding an unbounded result."""
+    rows = df.limit(bound + 1).collect()
+    return None if len(rows) > bound else rows
+
+
 def epoch_seconds(col):
     """Timestamp → fractional epoch seconds, safe for both TIMESTAMP and
     TIMESTAMP_NTZ inputs. Spark 4's ANSI rules forbid casting NTZ

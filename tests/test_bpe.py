@@ -134,26 +134,26 @@ def test_property_train_matches_reference(spark, texts, n):
 
 
 # ---------------------------------------------------------------------------
-# Arrow mapInPandas kernel (production path for real ~30k-merge vocabs)
+# Arrow mapInPandas kernel (rank-priority encoder)
 # ---------------------------------------------------------------------------
 
 
 def test_segment_pandas_kernel_parity(spark):
-    """kernel='pandas' (rank-priority encoder) must equal the expr
-    kernel (sequential replace per merge) on a genuinely-trained list
-    — the equivalence argument in bpe._segment_word_ranked."""
-    merges = bpe_train(_df(spark, CORPUS), "text", n_merges=8)
-    expr_rows = {
-        r["doc_id"]: r["bpe"]
-        for r in bpe_segment(_df(spark, CORPUS), "text", merges).collect()
-    }
-    pd_rows = {
-        r["doc_id"]: r["bpe"]
-        for r in bpe_segment(
-            _df(spark, CORPUS), "text", merges, kernel="pandas"
-        ).collect()
-    }
-    assert pd_rows == expr_rows
+    """The rank-priority encoder must equal the sequential
+    replace-per-merge reference on genuinely-trained lists — the
+    equivalence argument in bpe._segment_word_ranked — including the
+    collision-heavy tiny-alphabet corpora."""
+    for texts, n in [
+        (CORPUS, 8),
+        (["aaa aa a aaaa", "abab ab ba bab"], 12),
+        (["xy xyx yxy xxyy"], 12),
+    ]:
+        merges = bpe_train(_df(spark, texts), "text", n_merges=n)
+        rows = {
+            r["doc_id"]: r["bpe"]
+            for r in bpe_segment(_df(spark, texts), "text", merges).collect()
+        }
+        assert rows == {i: _ref_segment(t, merges) for i, t in enumerate(texts)}
 
 
 def test_segment_pandas_null_and_empty(spark):
@@ -163,7 +163,7 @@ def test_segment_pandas_null_and_empty(spark):
     )
     by_id = {
         r["doc_id"]: r["bpe"]
-        for r in bpe_segment(df, "text", merges, kernel="pandas").collect()
+        for r in bpe_segment(df, "text", merges).collect()
     }
     assert by_id[0] is None
     assert by_id[1] == []
@@ -171,11 +171,11 @@ def test_segment_pandas_null_and_empty(spark):
 
 
 def test_segment_pandas_500_merge_janino_guard(spark):
-    """A real tokenizer has ~30k merges; the expr kernel's chained
-    replace tree hits the measured janino/codegen wall far below that
-    (SCALE.md Addendum 5 §3). The pandas kernel must segment with a
+    """A real tokenizer has ~30k merges; a chained-replace expression
+    tree hits the measured janino/codegen wall far below that
+    (SCALE.md Addendum 5 §3). The Arrow kernel must segment with a
     500-merge list — verified against the pure-Python sequential
-    reference, which the expr kernel implements."""
+    reference."""
     # 501 DISTINCT chars: every chain merge applies exactly once, so
     # the full word provably collapses to one token (a repeating
     # alphabet would fuse into blocks instead and mask a broken chain)
@@ -187,7 +187,7 @@ def test_segment_pandas_500_merge_janino_guard(spark):
     df = _df(spark, texts)
     rows = {
         r["doc_id"]: r["bpe"]
-        for r in bpe_segment(df, "text", merges, kernel="pandas").collect()
+        for r in bpe_segment(df, "text", merges).collect()
     }
     for i, t in enumerate(texts):
         assert rows[i] == _ref_segment(t, merges)
@@ -303,8 +303,8 @@ def test_driver_local_real_corpus_parity(spark):
 
 def test_driver_local_train_feeds_pandas_segment(spark):
     """The production pair at real vocab size: driver-local training
-    (the only viable path for ~30k merges) feeding the pandas segment
-    kernel (the only kernel that survives a big merge list). 300
+    (the only viable path for ~30k merges) feeding the Arrow segment
+    kernel. 300
     merges over a 200-word corpus; segmentation must be lossless and
     match the pure-Python sequential reference."""
     import hashlib
@@ -315,9 +315,7 @@ def test_driver_local_train_feeds_pandas_segment(spark):
     assert len(merges) == 300
     rows = {
         r["doc_id"]: r["bpe"]
-        for r in bpe_segment(
-            _df(spark, texts), "text", merges, kernel="pandas"
-        ).collect()
+        for r in bpe_segment(_df(spark, texts), "text", merges).collect()
     }
     for i, t in enumerate(texts):
         assert rows[i] == _ref_segment(t, merges)
@@ -370,23 +368,25 @@ def test_train_and_vocab_matches_separate_calls(spark):
 
 
 def test_segment_ids_kernels_agree_and_roundtrip(spark):
+    """bpe_segment_ids (vocab built from the frame itself) equals the
+    reference segmentation mapped through bpe_vocab, and decodes back
+    to the words."""
     from syslog_ng_spark.operators.bpe import bpe_segment_ids, bpe_vocab
 
     merges = bpe_train(_df(spark, CORPUS), "text", n_merges=8)
     pd_ids = {
         r["doc_id"]: r["ids"]
-        for r in bpe_segment_ids(_df(spark, CORPUS), "text", merges, kernel="pandas").collect()
+        for r in bpe_segment_ids(_df(spark, CORPUS), "text", merges).collect()
     }
-    ex_ids = {
-        r["doc_id"]: r["ids"]
-        for r in bpe_segment_ids(_df(spark, CORPUS), "text", merges, kernel="expr").collect()
-    }
-    assert pd_ids == ex_ids
-    # ids decode back to the segmentation (lossless round trip)
-    inv = {
-        r["id"]: r["token"]
+    vocab = {
+        r["token"]: r["id"]
         for r in bpe_vocab(_df(spark, CORPUS), "text", merges).collect()
     }
+    assert pd_ids == {
+        i: [vocab[tok] for tok in _ref_segment(t, merges)] for i, t in enumerate(CORPUS)
+    }
+    # ids decode back to the segmentation (lossless round trip)
+    inv = {i: t for t, i in vocab.items()}
     for i, t in enumerate(CORPUS):
         decoded = "".join(inv[x] for x in pd_ids[i]).replace(EOW, " ").split()
         assert decoded == t.lower().split()
@@ -415,18 +415,14 @@ def test_astral_plane_train_parity(spark):
 
 
 def test_astral_plane_segment_kernels_agree(spark):
-    """pandas (Python code points) and expr (Java regex) segmenters
-    agree token-for-token on astral text, and the round trip restores
-    the original words."""
-    from syslog_ng_spark.operators.bpe import bpe_segment
-
+    """The segmenter (Python code points) agrees token-for-token with
+    the reference on astral text whose merges came from the
+    distributed trainer (Java regex '(.)' symbols), and the round trip
+    restores the original words."""
     df = _df(spark, ASTRAL_CORPUS)
     merges = bpe_train(df, "text", n_merges=6, driver_profile=False)
-    pd_rows = {r["doc_id"]: r["bpe"]
-               for r in bpe_segment(df, "text", merges, kernel="pandas").collect()}
-    ex_rows = {r["doc_id"]: r["bpe"]
-               for r in bpe_segment(df, "text", merges, kernel="expr").collect()}
-    assert pd_rows == ex_rows
+    pd_rows = {r["doc_id"]: r["bpe"] for r in bpe_segment(df, "text", merges).collect()}
+    assert pd_rows == {i: _ref_segment(t, merges) for i, t in enumerate(ASTRAL_CORPUS)}
     for i, t in enumerate(ASTRAL_CORPUS):
         decoded = "".join(pd_rows[i]).replace(EOW, " ").split()
         assert decoded == t.lower().split()
@@ -455,9 +451,8 @@ def test_astral_plane_property_local_vs_spark(spark):
 def test_vocab_duplicate_surface_form_keeps_lowest_id(spark):
     """Two merges yielding the same token string (('ab','c') and
     ('a','bc') both produce 'abc') must not yield duplicate vocab rows:
-    policy is lowest-id-wins, so the pandas dict, the expr kernel's
-    map literal (mapKeyDedupPolicy=EXCEPTION), and the SQL oracle's
-    join all see one row per token."""
+    policy is lowest-id-wins, so bpe_segment_ids' dict and the SQL
+    oracle's join both see one row per token."""
     from collections import Counter
 
     from syslog_ng_spark.operators.bpe import bpe_segment_ids, bpe_vocab
@@ -471,23 +466,36 @@ def test_vocab_duplicate_surface_form_keeps_lowest_id(spark):
     vocab = {r["token"]: r["id"] for r in rows}
     n_alpha = len(set("abc") | {EOW})
     assert vocab["abc"] == n_alpha + 3 - 1  # first producer (rank 3) wins
-    # both kernels encode under the deduped vocab without raising
+    # encoding under the deduped vocab maps every token, as the
+    # reference segmentation does
     pd_ids = bpe_segment_ids(
-        _df(spark, corpus), "text", merges, kernel="pandas", vocab=vocab
+        _df(spark, corpus), "text", merges, vocab=vocab
     ).collect()[0]["ids"]
-    ex_ids = bpe_segment_ids(
-        _df(spark, corpus), "text", merges, kernel="expr", vocab=vocab
-    ).collect()[0]["ids"]
-    assert pd_ids == ex_ids
+    assert pd_ids == [vocab[tok] for tok in _ref_segment(corpus[0], merges)]
     assert all(x is not None for x in pd_ids)
+
+
+def test_local_vocab_ignores_merge_order(spark):
+    """The driver-local vocab visits merges in rank order whatever
+    order they arrive in, so lowest-id-wins holds for a list fed out
+    of rank order — equal to bpe_vocab, which takes MIN(id)."""
+    from syslog_ng_spark.operators.bpe import _local_vocab, bpe_vocab
+
+    corpus = ["abc abc ab bc"]
+    merges = [(4, "a", "bc"), (2, "b", "c"), (3, "ab", "c"), (1, "a", "b")]
+    vocab = _local_vocab(list(_ref_profile(corpus).items()), merges)
+    expect = {r["token"]: r["id"] for r in bpe_vocab(_df(spark, corpus), "text", merges).collect()}
+    assert vocab == expect
+    assert vocab["abc"] == len(set("abc") | {EOW}) + 3 - 1  # rank 3, not rank 4
 
 
 def test_segment_ids_unknown_token_is_null(spark):
     """Encoding NEW text with the TRAINING corpus's vocab: a symbol
     absent from the training alphabet maps to NULL (unk policy belongs
-    to the loader), identically in both kernels. Passing the training
-    vocab is what keeps merge-token ids stable — building it from the
-    inference frame would silently shift every id."""
+    to the loader), exactly where the reference segmentation has a
+    token outside the vocab. Passing the training vocab is what keeps
+    merge-token ids stable — building it from the inference frame
+    would silently shift every id."""
     from syslog_ng_spark.operators.bpe import bpe_segment_ids, bpe_vocab
 
     merges = bpe_train(_df(spark, CORPUS), "text", n_merges=4)
@@ -496,10 +504,9 @@ def test_segment_ids_unknown_token_is_null(spark):
         for r in bpe_vocab(_df(spark, CORPUS), "text", merges).collect()
     }
     probe = ["low zebra!"]  # 'z' and '!' are not in the CORPUS alphabet
-    for kernel in ("pandas", "expr"):
-        rows = bpe_segment_ids(
-            _df(spark, probe), "text", merges, kernel=kernel, vocab=train_vocab
-        ).collect()
-        ids = rows[0]["ids"]
-        assert None in ids, kernel      # unseen symbol -> NULL id
-        assert any(x is not None for x in ids), kernel
+    ids = bpe_segment_ids(
+        _df(spark, probe), "text", merges, vocab=train_vocab
+    ).collect()[0]["ids"]
+    assert ids == [train_vocab.get(tok) for tok in _ref_segment(probe[0], merges)]
+    assert None in ids                  # unseen symbol -> NULL id
+    assert any(x is not None for x in ids)

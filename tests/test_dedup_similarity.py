@@ -359,22 +359,38 @@ def test_connected_components_driver_local_matches_distributed(spark):
     assert local[102] == 100 and local[200] == 7 and local[29] == 10
 
 
-def test_ivf_assign_pandas_matches_expr_kernel(spark):
-    """The Arrow-matmul assignment (large-k kernel) must agree with the
-    Catalyst expression kernel row for row — same 9-digit rounding,
-    same tie-break toward the larger cell index."""
+def test_ivf_assign_matches_python_argmax(spark):
+    """ivf_assign against a pure-Python argmax: dot with each centroid
+    normalized by math.sqrt(sum(x*x)), rounded to 9 digits, ties
+    toward the larger cell index; a NULL vector gets a NULL cell."""
+    import math
     import random
 
-    from syslog_ng_spark.operators.similarity import ivf_assign, ivf_assign_pandas
+    from syslog_ng_spark.operators.similarity import ivf_assign
+
+    def ref(v, cents):
+        if v is None:
+            return None
+        normed = [[x / (math.sqrt(sum(y * y for y in c)) or 1.0) for x in c] for c in cents]
+        scores = [round(sum(a * b for a, b in zip(v, c)), 9) for c in normed]
+        return max(range(len(cents)), key=lambda i: (scores[i], i))
 
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(300)]
-    # force exact ties: duplicate centroids
+    # force exact ties: a duplicate centroid
     cents = [rows[i][1] for i in range(6)] + [rows[0][1]]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = {r.vec_id: r.c for r in ivf_assign(df, cents, "embedding", "c").collect()}
-    b = {r.vec_id: r.c for r in ivf_assign_pandas(df, cents, target="c").collect()}
-    assert a == b
+    rows.append((300, None))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").repartition(4)
+    got = {r.vec_id: r.c for r in ivf_assign(df, cents, "embedding", "c").collect()}
+    assert got == {i: ref(v, cents) for i, v in rows}
+    assert got[0] == 6 and got[300] is None  # tie to the larger index
+    assert ivf_assign(df.where("vec_id < 0"), cents, "embedding", "c").collect() == []
+
+    # scores 1.0 and 1 - 5e-11 differ only past the 9th digit: the
+    # rounding ties them, so the larger index wins
+    near = [[1.0, 0.0], [1.0, 1e-5]]
+    one = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    assert ivf_assign(one, near, "embedding", "c").first().c == 1 == ref([1.0, 0.0], near)
 
 
 def test_repeated_passages_coverage(spark):
