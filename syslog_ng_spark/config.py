@@ -702,7 +702,8 @@ def _source_stream(spark: SparkSession, spec: Mapping) -> DataFrame:
     kind = spec["kind"]
     if kind == "file":
         # directory-watching ingestion (the replayable production path)
-        df = stream_src.file_stream(spark, spec["path"])
+        df = stream_src.file_stream(
+            spark, spec["path"], recursive=spec.get("recursive", False))
     elif kind == "socket-stream":
         driver = spec.get("driver", "")
         if driver.startswith("unix"):
@@ -816,6 +817,24 @@ def _mangle_hostname(df: DataFrame, spec: Mapping) -> DataFrame:
     return df.withColumn("host", new)
 
 
+def _file_paths(spec: Mapping):
+    """The paths of every file() driver in a source spec."""
+    if spec["kind"] == "union":
+        for sub in spec["sources"]:
+            yield from _file_paths(sub)
+    elif spec["kind"] == "file":
+        yield spec["path"]
+
+
+def _copy_runtime_conf(spark: SparkSession, session: SparkSession) -> None:
+    """Carry the caller's runtime SQL conf (time zone, map-key policy,
+    ...) into the daemon's session; static keys came with the shared
+    SparkContext already."""
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            session.conf.set(key, value)
+
+
 def run_conf_stream(
     spark: SparkSession,
     text: str,
@@ -833,14 +852,39 @@ def run_conf_stream(
     log path, checkpointed under `checkpoint_dir/log#N`. Pass
     available_now=True to drain what exists and stop (file sources;
     backfill/testing) — sockets need the default continuous trigger.
-    Returns the list of StreamingQuery handles."""
+    Returns the list of StreamingQuery handles.
+
+    The streams run on a session of their own, derived from `spark`
+    (`spark.newSession()`) with `spark`'s runtime SQL conf copied in;
+    `spark` itself is not changed. When any file() source is local
+    (`streaming.lists_locally`), that session lists the file sources
+    on the driver (`streaming.list_on_driver`): the local files live
+    on the daemon's host, not the executors', and one driver pass per
+    trigger costs the same whether the glob matches 10 files or 500,
+    where Spark's default lists more than 32 with a Spark job every
+    trigger. The threshold is session-wide, so another scheme in the
+    same conf is listed on the driver too; a conf with no local file
+    source keeps Spark's distributed listing, which can win on an
+    object store."""
     import json as _json
     import os as _os
 
+    from syslog_ng_spark.sources import streaming as stream_src
+
     pipelines = compile_conf(parse_conf(text, include_dir), strict=strict)
+    session = spark.newSession()
+    local = any(stream_src.lists_locally(spark, path)
+                for p in pipelines for path in _file_paths(p["source"]))
+
+    def configure():
+        _copy_runtime_conf(spark, session)
+        if local:
+            stream_src.list_on_driver(session)
+
+    configure()
     queries = []
     for p in pipelines:
-        df = _source_stream(spark, p["source"])
+        df = _source_stream(session, p["source"])
         tpls = p.get("templates")
         # options { use-uniqid(yes); } in daemon mode (r12): $RCPTID is
         # a RECEPTION id — assigned per micro-batch on the raw source
@@ -910,5 +954,9 @@ def run_conf_stream(
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
+        # building a plan may set conf on the active session (the
+        # LAST_WIN map-key policy of format._merge_maps): copy again
+        # before the stream clones the session at start
+        configure()
         queries.append(writer.start())
     return queries

@@ -26,9 +26,15 @@ _APACHE_RE = (
     r"^(?:([A-Za-z0-9\-\._]+):(\d+) )?"  # 1 vhost, 2 port
     r"(\S+) (\S+) (\S+) "  # 3 clientip, 4 ident, 5 auth
     r"\[([^\]]+)\] "  # 6 timestamp
-    r'"([^"]*)" '  # 7 rawrequest
-    r"(\d{3}) (\S+)"  # 8 response, 9 bytes ('-' allowed)
-    r'(?: "([^"]*)" "([^"]*)")?$'  # 10 referrer, 11 agent
+    # 7 rawrequest, split inside the same match into 8 verb (its first
+    # token), 9 request (the second, after one space) and 10
+    # httpversion: a third and LAST token, 'HTTP/' stripped (the
+    # conf's subst). A token is a run of non-whitespace, non-quote chars;
+    # "last" allows one line terminator before the quote, like `$`
+    r'"((?:([^\s"]+)(?: ([^\s"]+)(?: (?:HTTP/)?([^\s"]*)'
+    r'(?=(?:\r\n|[\n\r\u0085\u2028\u2029])?"))?)?)?[^"]*)" '
+    r"(\d{3}) (\S+)"  # 11 response, 12 bytes ('-' allowed)
+    r'(?: "([^"]*)" "([^"]*)")?$'  # 13 referrer, 14 agent
 )
 
 
@@ -42,10 +48,14 @@ def apache_accesslog_parser(
     httpversion (HTTP/ stripped, the conf's subst), response int,
     bytes long ('-' → null), referrer, agent, vhost, port. Lines that
     don't match yield nulls (the reference's drop-invalid is a
-    .where(col(prefix+'response').isNotNull()) away).
+    .where(col(prefix+'response').isNotNull()) away). An empty raw
+    request gives NULL verb/request/httpversion; a request without
+    the token a field needs gives ''.
 
-    The 11-group regex runs once per row (parsers._parse_once); the
-    per-column regexp_extract form re-executed it ~11x per row."""
+    One 14-group regex parses the line, the request's tokens
+    included, once per row (parsers._parse_once); the per-column
+    regexp_extract form re-executed it ~11x per row, and the request
+    took three regexp_extracts more."""
     from syslog_ng_spark.operators.parsers import _group, _parse_once
 
     def g(i: int) -> Column:
@@ -54,24 +64,24 @@ def apache_accesslog_parser(
     def nullable(c: Column) -> Column:
         return F.when(c != "", c)
 
-    raw = nullable(g(7))
-    return _parse_once(df, col, _APACHE_RE, 11, {
+    def request_token(i: int) -> Column:
+        return F.when(g(7) != "", g(i))
+
+    return _parse_once(df, col, _APACHE_RE, 14, {
         prefix + "vhost": nullable(g(1)),
         prefix + "port": nullable(g(2)).cast("int"),
         prefix + "clientip": nullable(g(3)),
         prefix + "ident": nullable(g(4)),
         prefix + "auth": nullable(g(5)),
         prefix + "ts": F.try_to_timestamp(nullable(g(6)), F.lit("dd/MMM/yyyy:HH:mm:ss Z")),
-        prefix + "verb": F.regexp_extract(raw, r"^(\S+)", 1),
-        prefix + "request": F.regexp_extract(raw, r"^\S+ (\S+)", 1),
-        # the conf's rewrite: subst("^HTTP/(.*)$", "$1")
-        prefix + "httpversion": F.regexp_replace(
-            F.regexp_extract(raw, r"^\S+ \S+ (\S+)$", 1), "^HTTP/", ""),
-        prefix + "response": nullable(g(8)).cast("int"),
-        prefix + "bytes": F.when(g(9) == "-", F.lit(None).cast("long")).otherwise(
-            nullable(g(9)).cast("long")),
-        prefix + "referrer": nullable(g(10)),
-        prefix + "agent": nullable(g(11)),
+        prefix + "verb": request_token(8),
+        prefix + "request": request_token(9),
+        prefix + "httpversion": request_token(10),
+        prefix + "response": nullable(g(11)).cast("int"),
+        prefix + "bytes": F.when(g(12) == "-", F.lit(None).cast("long")).otherwise(
+            nullable(g(12)).cast("long")),
+        prefix + "referrer": nullable(g(13)),
+        prefix + "agent": nullable(g(14)),
     })
 
 

@@ -2,21 +2,37 @@
 
 Reference: modules/affile (file()/wildcard-file()/stdin/pipe drivers).
 All of those deliver raw lines; in Spark that's ``spark.read.text`` with
-glob paths (wildcard-file's recursive matching == recursiveFileLookup).
+glob paths. wildcard-file(recursive(yes)) matches its filename-pattern
+in every subdirectory of base-dir, which a glob cannot say: see
+``recursive_reader``.
 Columnar formats (parquet) are first-class here because at 100 TB the
 engine's own storage should be columnar, not line-oriented.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+
+
+def recursive_reader(reader, path: str):
+    """wildcard-file(recursive(yes)) on a batch or stream reader: `path`
+    is base-dir/filename-pattern, and every file under base-dir whose
+    NAME matches the pattern is read, at any depth (modules/affile
+    wildcard-file monitors each subdirectory). Returns (reader, path
+    to load). Reading the glob itself with recursiveFileLookup would
+    only descend into subdirectories whose own names match."""
+    base, pattern = os.path.split(path)
+    reader = reader.option("recursiveFileLookup", "true").option("pathGlobFilter", pattern)
+    return reader, base
 
 
 def text_lines(spark: SparkSession, path: str, recursive: bool = False) -> DataFrame:
     """file()/wildcard-file() — one row per line in column `raw`."""
     reader = spark.read
     if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
+        reader, path = recursive_reader(reader, path)
     return reader.text(path).withColumnRenamed("value", "raw")
 
 

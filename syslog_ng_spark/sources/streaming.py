@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from syslog_ng_spark.sources.files import recursive_reader
+
 
 def socket_lines(spark: SparkSession, host: str = "localhost", port: int = 5140) -> DataFrame:
     return (
@@ -121,8 +123,48 @@ def udp_datagram_lines(
     return df.select(peer.alias("peer"), payload.alias("raw")), bridge
 
 
-def file_stream(spark: SparkSession, path: str, fmt: str = "text", schema: str | None = None) -> DataFrame:
+# InMemoryFileIndex lists more root paths than this with a distributed
+# Spark job (Spark's default: 32)
+LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def lists_locally(spark: SparkSession, path: str) -> bool:
+    """Whether `path` qualifies to the local file system (`file:`
+    scheme, or no scheme under a local default file system)."""
+    hadoop_fs = spark.sparkContext._jvm.org.apache.hadoop.fs
+    scheme = hadoop_fs.Path(path).toUri().getScheme()
+    if scheme is None:
+        scheme = hadoop_fs.FileSystem.getDefaultUri(
+            spark.sparkContext._jsc.hadoopConfiguration()).getScheme()
+    return scheme == "file"
+
+
+def list_on_driver(session: SparkSession) -> None:
+    """Make every file stream created on `session` list its paths on
+    the driver, however many files its glob matches."""
+    session.conf.set(LISTING_THRESHOLD, str(2**31 - 1))
+
+
+def file_stream(
+    spark: SparkSession, path: str, fmt: str = "text", schema: str | None = None,
+    recursive: bool = False,
+) -> DataFrame:
     """Checkpointed directory tail — the daemon's wildcard-file().
+
+    Listing: at every trigger FileStreamSource expands the glob and
+    lists each match as a root path of its own. Past
+    `LISTING_THRESHOLD` roots (32 by default) that listing is a Spark
+    job, which on a cluster lists the executors' disks rather than
+    the daemon host's, and on a single host costs more per trigger
+    than the batch it feeds (SCALE.md Addendum 22). The source reads
+    the threshold from `spark`, the session the stream is created on,
+    at every trigger: run_conf_stream creates its streams on a session
+    of their own and raises it there (`list_on_driver`) when a source
+    is local (`lists_locally`), so the listing stays on the driver,
+    one pass per trigger. Files are selected the same either way.
+
+    recursive=True is wildcard-file(recursive(yes)), as in batch mode
+    (`files.recursive_reader`).
 
     Rotation semantics (vs modules/affile/file-reader.c, which detects
     a same-name recreate by inode change and reopens at offset 0):
@@ -137,6 +179,8 @@ def file_stream(spark: SparkSession, path: str, fmt: str = "text", schema: str |
     reader = spark.readStream.format(fmt)
     if schema:
         reader = reader.schema(schema)
+    if recursive:
+        reader, path = recursive_reader(reader, path)
     df = reader.load(path)
     return df.withColumnRenamed("value", "raw") if fmt == "text" else df
 

@@ -37,6 +37,11 @@ LINES_APACHE = [
     '"GET /apache_pb.gif HTTP/1.0" 200 2326 "http://www.example.com/start.html" "Mozilla/4.08"',
     '127.0.0.1 - frank [10/Oct/2000:13:55:36 -0700] "GET /apache_pb.gif HTTP/1.0" 200 -',
     "not an access log",
+    # raw requests that are not `verb request version`
+    '10.0.0.1 - - [10/Oct/2000:13:55:36 -0700] "-" 408 -',
+    '10.0.0.1 - - [10/Oct/2000:13:55:36 -0700] "GET" 400 0',
+    '10.0.0.1 - - [10/Oct/2000:13:55:36 -0700] "GET /a b HTTP/1.1" 400 0',
+    '10.0.0.1 - - [10/Oct/2000:13:55:36 -0700] " GET / HTTP/1.0" 400 0',
 ]
 LINES_CISCO = [
     "<189>123: *Mar  1 18:46:11.299: %SYS-5-CONFIG_I: Configured from console by vty2",
@@ -122,6 +127,16 @@ def test_apache_rows_and_schema(spark):
         (1, LINES_APACHE[1], "t", None, None, "127.0.0.1", "-", "frank", stamp,
          "GET", "/apache_pb.gif", "1.0", 200, None, None, None),
         (2, LINES_APACHE[2], "t") + (None,) * 13,
+        # verb is the first token, request the second after one space,
+        # httpversion a third and last one: '' where the token is absent
+        (3, LINES_APACHE[3], "t", None, None, "10.0.0.1", "-", "-", stamp,
+         "-", "", "", 408, None, None, None),
+        (4, LINES_APACHE[4], "t", None, None, "10.0.0.1", "-", "-", stamp,
+         "GET", "", "", 400, 0, None, None),
+        (5, LINES_APACHE[5], "t", None, None, "10.0.0.1", "-", "-", stamp,
+         "GET", "/a", "", 400, 0, None, None),
+        (6, LINES_APACHE[6], "t", None, None, "10.0.0.1", "-", "-", stamp,
+         "", "", "", 400, 0, None, None),
     ]
 
 

@@ -348,6 +348,8 @@ def test_app_parsers_parse_once_under_a_filter(spark, parser):
         out = app_parsers.apache_accesslog_parser(df, "message").where(
             (F.col("apache_response") == 200) & F.col("apache_clientip").isNotNull())
         regex = app_parsers._APACHE_RE
+        # verb, request and httpversion come out of the same match
+        assert _regex_runs(out, "regexp_extract") == 0
     elif parser == "cisco":
         df = spark.createDataFrame(
             [("%LINK-3-UPDOWN: Interface FastEthernet0/1, changed state to down",)],

@@ -9,6 +9,7 @@ from syslog_ng_spark.operators.pii import (
     cc_candidates,
     luhn_valid,
     pii_counts,
+    pii_matches,
     pii_redact,
     pii_redact_col,
 )
@@ -105,3 +106,29 @@ def test_ssn_exclusions(spark):
 def test_plan_stays_jvm_side(df):
     plan = pii_redact(df, "text", with_counts=True)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+# pii_matches honors the CALLER's category order where patterns overlap
+# at the same position
+
+
+def test_pii_caller_category_order_controls_precedence(spark):
+    # '123-456-7890-123' is 13 digits: the cc candidate matches the
+    # whole run, phone matches the 12-char prefix — same start
+    # position, so alternation branch order decides
+    df = spark.createDataFrame([("call 123-456-7890-123 now",)], ["t"])
+    phone_first = df.select(
+        pii_matches(F.col("t"), ["phone", "credit_card"]).alias("m")
+    ).head()["m"]
+    cc_first = df.select(
+        pii_matches(F.col("t"), ["credit_card", "phone"]).alias("m")
+    ).head()["m"]
+    assert phone_first == ["123-456-7890"]
+    assert cc_first == ["123-456-7890-123"]
+
+
+def test_pii_default_order_unchanged(spark):
+    # default cats put credit_card first — r11 behavior preserved
+    df = spark.createDataFrame([("card 4111 1111 1111 1111 ok",)], ["t"])
+    got = df.select(pii_matches(F.col("t")).alias("m")).head()["m"]
+    assert got == ["4111 1111 1111 1111"]
