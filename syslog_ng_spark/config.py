@@ -515,6 +515,35 @@ def _step(df: DataFrame, spec: Mapping, templates: Mapping | None = None) -> Dat
 # them numbers the frame this destination writes
 _TEMPLATE_FIELDS = ("template", "message", "key", "topic")
 
+# the template _destination renders for these kinds when the spec
+# sets none
+_DEFAULT_TEMPLATES = {"program": {"template": "$MESSAGE"},
+                      "network": {"template": "$MESSAGE"},
+                      "kafka": {"message": "$MESSAGE"}}
+
+
+def _columns_read(df: DataFrame, dests, templates: Mapping | None = None) -> list[str] | None:
+    """The columns of `df` that `dests` read, in frame order, or None
+    when one of them writes whole rows (parquet/csv/json, text without
+    template(), suppress(), elasticsearch). Each template field is
+    compiled against `df` and the analyzed projection names the
+    columns it references."""
+    from syslog_ng_spark.template import compile_template
+
+    tpls = []
+    for d in dests:
+        kind = d["kind"]
+        rendered = kind in _DEFAULT_TEMPLATES or (kind == "text" and "template" in d)
+        if d.get("suppress") or not (rendered or kind == "none"):
+            return None
+        fields = {**_DEFAULT_TEMPLATES.get(kind, {}),
+                  **{f: d[f] for f in _TEMPLATE_FIELDS if d.get(f)}}
+        tpls += fields.values()
+    refs = df.select(*[compile_template(t, df, templates=templates) for t in tpls]) \
+        ._jdf.queryExecution().analyzed().references()
+    out = df._jdf.queryExecution().analyzed().output()
+    return [a.name() for a in (out.apply(i) for i in range(out.size())) if refs.contains(a)]
+
 
 def _destination(df: DataFrame, spec: Mapping, templates: Mapping | None = None) -> int:
     """Write `df` to one destination spec. Returns the number of rows
@@ -532,6 +561,7 @@ def _destination(df: DataFrame, spec: Mapping, templates: Mapping | None = None)
             f"destination driver {spec.get('driver')!r} has no Spark analog "
             "(compiled with strict=False)"
         )
+    spec = {**_DEFAULT_TEMPLATES.get(kind, {}), **spec}
     if spec.get("suppress"):
         # suppress(N): per-writer duplicate collapse
         # (lib/logwriter.c log_writer_is_msg_suppressed) — applied to
@@ -569,7 +599,7 @@ def _destination(df: DataFrame, spec: Mapping, templates: Mapping | None = None)
                                  mode=spec.get("mode", "overwrite"))
         elif kind == "program":
             sinks.ProgramDestination(
-                command=spec["command"], template=spec.get("template", "$MESSAGE"),
+                command=spec["command"], template=spec["template"],
                 templates=templates,
             ).write(df)
         elif kind == "elasticsearch":
@@ -579,7 +609,7 @@ def _destination(df: DataFrame, spec: Mapping, templates: Mapping | None = None)
             tls_spec = spec.get("tls")
             sinks.NetworkDestination(
                 targets=[tuple(t) for t in spec["targets"]],
-                template=spec.get("template", "$MESSAGE"),
+                template=spec["template"],
                 framing=spec.get("framing", "newline"),
                 tls=sinks.TlsOptions(**tls_spec) if tls_spec else None,
                 templates=templates,
@@ -588,7 +618,7 @@ def _destination(df: DataFrame, spec: Mapping, templates: Mapping | None = None)
             sinks.kafka_sink(
                 df,
                 spec["brokers"],
-                message=spec.get("message", "$MESSAGE"),
+                message=spec["message"],
                 key=spec.get("key"),
                 topic=spec.get("topic", "syslog-ng"),
                 fallback_topic=spec.get("fallback_topic"),
@@ -849,10 +879,21 @@ def run_conf_stream(
     destination receives each micro-batch through the SAME batch
     writer (_destination via foreachBatch), so file/network-TLS/kafka/
     program destinations all work unchanged. One StreamingQuery per
-    log path, checkpointed under `checkpoint_dir/log#N`. Pass
-    available_now=True to drain what exists and stop (file sources;
-    backfill/testing) — sockets need the default continuous trigger.
-    Returns the list of StreamingQuery handles.
+    log path, checkpointed under `checkpoint_dir/log#N`; every path is
+    built before the first query starts. Pass available_now=True to
+    drain what exists and stop (file sources; backfill/testing) —
+    sockets need the default continuous trigger. Returns the list of
+    StreamingQuery handles.
+
+    foreachBatch hands each micro-batch over as computed rows, so
+    Catalyst cannot prune a column there that no destination reads.
+    Each path's stream is therefore projected, before writeStream, to
+    the columns its destinations' templates reference
+    (`_columns_read`); a path with a destination that writes whole
+    rows keeps every column, and a use-uniqid(yes) path, whose steps
+    run per micro-batch, is not projected. Destinations that share a
+    file-family path write one micro-batch at a time: their committers
+    share the path's `_temporary` directory.
 
     The streams run on a session of their own, derived from `spark`
     (`spark.newSession()`) with `spark`'s runtime SQL conf copied in;
@@ -865,9 +906,14 @@ def run_conf_stream(
     trigger. The threshold is session-wide, so another scheme in the
     same conf is listed on the driver too; a conf with no local file
     source keeps Spark's distributed listing, which can win on an
-    object store."""
+    object store. When `checkpoint_dir` is local, that session writes
+    the checkpoint logs through Hadoop's FileSystem API
+    (`streaming.checkpoint_on_file_system`), which forks no process
+    per file-status call (SCALE.md Addendum 23)."""
     import json as _json
     import os as _os
+    import threading
+    from contextlib import nullcontext
 
     from syslog_ng_spark.sources import streaming as stream_src
 
@@ -875,17 +921,30 @@ def run_conf_stream(
     session = spark.newSession()
     local = any(stream_src.lists_locally(spark, path)
                 for p in pipelines for path in _file_paths(p["source"]))
+    local_checkpoint = stream_src.lists_locally(spark, checkpoint_dir)
 
     def configure():
         _copy_runtime_conf(spark, session)
         if local:
             stream_src.list_on_driver(session)
+        if local_checkpoint:
+            stream_src.checkpoint_on_file_system(session)
 
     configure()
-    queries = []
+    file_kinds = ("text", "parquet", "csv", "json")
+    # one lock per file-family destination path, shared by every query
+    locks = {d["path"]: threading.Lock() for p in pipelines
+             for d in p.get("destinations", ()) if d["kind"] in file_kinds}
+    writers = []
     for p in pipelines:
         df = _source_stream(session, p["source"])
         tpls = p.get("templates")
+        # micro-batches APPEND to file-family destinations (the batch
+        # default overwrite would erase earlier batches' output)
+        dests = [
+            {**d, "mode": "append"} if d["kind"] in file_kinds else d
+            for d in p.get("destinations", ())
+        ]
         # options { use-uniqid(yes); } in daemon mode (r12): $RCPTID is
         # a RECEPTION id — assigned per micro-batch on the raw source
         # frame BEFORE the step chain (filtered messages still consume
@@ -904,13 +963,9 @@ def run_conf_stream(
         else:
             for step in p.get("steps", ()):
                 df = _step(df, step, templates=tpls)
-        # micro-batches APPEND to file-family destinations (the batch
-        # default overwrite would erase earlier batches' output)
-        dests = [
-            {**d, "mode": "append"}
-            if d["kind"] in ("text", "parquet", "csv", "json") else d
-            for d in p.get("destinations", ())
-        ]
+            cols = _columns_read(df, dests, tpls)
+            if cols is not None:
+                df = df.select(*[F.col(f"`{c}`") for c in cols])
         # per-destination $SEQNUM continuation: the daemon's LogWriter
         # counter lives for the daemon's lifetime, so each micro-batch
         # continues where the last ended
@@ -939,8 +994,9 @@ def run_conf_stream(
             # job, and the continuation point can't desync from what
             # the writer actually assigned
             for i, d in enumerate(_dests):
-                _seq[i] += _destination(
-                    batch_df, {**d, "seqnum_start": _seq[i]}, templates=_tpls)
+                with locks.get(d.get("path"), nullcontext()):
+                    _seq[i] += _destination(
+                        batch_df, {**d, "seqnum_start": _seq[i]}, templates=_tpls)
             if _rcpt:
                 release_numbering_cache(rcpt_frame)
                 tmp = _rcpt + ".tmp"
@@ -954,9 +1010,9 @@ def run_conf_stream(
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
-        # building a plan may set conf on the active session (the
-        # LAST_WIN map-key policy of format._merge_maps): copy again
-        # before the stream clones the session at start
-        configure()
-        queries.append(writer.start())
-    return queries
+        writers.append(writer)
+    # building a plan may set conf on the active session (the
+    # LAST_WIN map-key policy of format._merge_maps): copy again
+    # before the streams clone the session at start
+    configure()
+    return [w.start() for w in writers]

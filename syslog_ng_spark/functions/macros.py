@@ -15,10 +15,15 @@ from syslog_ng_spark.datamodel import facility_name, pri, severity_name  # noqa:
 
 
 def isodate(ts: Column) -> Column:
-    """$ISODATE — ISO8601 with timezone offset; session TZ is UTC so the
-    offset is rendered literally (macros.c renders +HH:MM, Java's XXX
-    would yield 'Z')."""
-    return F.concat(F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss"), F.lit("+00:00"))
+    """$ISODATE — ISO8601 with the session time zone's offset as +HH:MM,
+    like macros.c (`xxx`: UTC renders +00:00, where Java's XXX would
+    yield 'Z')."""
+    return F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ssxxx")
+
+
+def tzoffset(ts: Column) -> Column:
+    """$TZOFFSET / $TZ — the session time zone's offset at `ts`, +HH:MM."""
+    return F.date_format(ts, "xxx")
 
 
 def fulldate(ts: Column) -> Column:

@@ -145,6 +145,24 @@ def list_on_driver(session: SparkSession) -> None:
     session.conf.set(LISTING_THRESHOLD, str(2**31 - 1))
 
 
+# which CheckpointFileManager a streaming query writes its offset and
+# commit logs with (Spark's default: FileContextBasedCheckpointFileManager)
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+                         "FileSystemBasedCheckpointFileManager")
+
+
+def checkpoint_on_file_system(session: SparkSession) -> None:
+    """Make every query started on `session` write its checkpoint
+    through Hadoop's FileSystem API. On a local checkpoint without
+    libhadoop, the default FileContext manager forks a `readlink`
+    process per file-status call, dozens per trigger (SCALE.md
+    Addendum 23); the FileSystem manager keeps the checksummed `.crc`
+    files, the checkpoint layout and the atomic rename, without those
+    forks."""
+    session.conf.set(CHECKPOINT_MANAGER, FS_CHECKPOINT_MANAGER)
+
+
 def file_stream(
     spark: SparkSession, path: str, fmt: str = "text", schema: str | None = None,
     recursive: bool = False,

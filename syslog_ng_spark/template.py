@@ -329,9 +329,8 @@ _DATE_FNS: dict[str, Callable[[Column], Column]] = {
     "MONTH_WEEK": _month_week,
     "HOUR12": lambda ts: F.date_format(ts, "hh"),
     "AMPM": lambda ts: F.date_format(ts, "a"),
-    # session TZ is UTC everywhere (matches the DuckDB oracle)
-    "TZOFFSET": lambda ts: F.lit("+00:00"),
-    "TZ": lambda ts: F.lit("+00:00"),
+    "TZOFFSET": macros.tzoffset,
+    "TZ": macros.tzoffset,
     # M_MSEC/M_USEC: zero-padded sub-second fields of the stamp
     "MSEC": lambda ts: F.date_format(ts, "SSS"),
     # cast: unix_micros rejects TIMESTAMP_NTZ inputs (session TZ is

@@ -328,6 +328,26 @@ def test_extended_macros(spark, template, expected):
     assert render(spark, template) == expected
 
 
+@pytest.mark.parametrize("zone, isodate", [
+    ("UTC", "2024-01-05T03:04:05+00:00"),
+    ("America/New_York", "2024-01-04T22:04:05-05:00"),
+    ("Asia/Kolkata", "2024-01-05T08:34:05+05:30"),
+])
+def test_date_macros_render_the_session_time_zone_offset(spark, zone, isodate):
+    """macros.c renders $ISODATE/$TZOFFSET/$TZ with the offset of the
+    time zone the stamp is shown in: here the session time zone."""
+    df = spark.range(1).select(F.to_timestamp(F.lit("2024-01-05T03:04:05Z")).alias("ts"))
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        got = df.select(compile_template(
+            "$ISODATE $TZOFFSET $TZ $S_ISODATE $R_TZOFFSET", df)).first()[0]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    offset = isodate[-6:]
+    assert got == f"{isodate} {offset} {offset} {isodate} {offset}"
+
+
 def test_escaping_option(spark):
     """test_template.c test_escaping: with escaping on, substituted
     values get backslash-escaped quotes; literals are untouched."""
