@@ -545,13 +545,35 @@ def _columns_read(df: DataFrame, dests, templates: Mapping | None = None) -> lis
     return [a.name() for a in (out.apply(i) for i in range(out.size())) if refs.contains(a)]
 
 
-def _destination(df: DataFrame, spec: Mapping, templates: Mapping | None = None) -> int:
+def _rendered(df: DataFrame, template: str, templates: Mapping | None,
+              compiled: dict | None) -> DataFrame:
+    """`df` with the column `rendered`, `template` rendered per row.
+    `compiled` is a dict a long-lived writer keeps across calls (the
+    daemon, across micro-batches): it holds the template's compiled
+    Column per frame schema, which is all the compile reads of `df`."""
+    from syslog_ng_spark.template import compile_template, template_format
+
+    if compiled is None:
+        return template_format(df, template, target="rendered", templates=templates)
+    key = (template, tuple(df.dtypes))
+    if key not in compiled:
+        compiled[key] = compile_template(template, df, templates=templates)
+    return df.withColumn("rendered", compiled[key])
+
+
+def _destination(df: DataFrame, spec: Mapping, templates: Mapping | None = None,
+                 on_driver: bool = False, compiled: dict | None = None) -> int:
     """Write `df` to one destination spec. Returns the number of rows
     this write actually NUMBERED with a fresh $SEQNUM (0 when the
     destination's templates don't reference it, or the frame already
     carried a seqnum column) so a long-lived caller (the daemon's
     foreachBatch) can advance its per-destination counter by exactly
-    what was numbered instead of re-counting the batch."""
+    what was numbered instead of re-counting the batch.
+
+    on_driver=True appends a text destination's lines from the driver
+    (`sinks.append_text_on_driver`; the daemon's local file()
+    destinations); `compiled` keeps a text destination's compiled
+    template across calls (`_rendered`)."""
     from syslog_ng_spark.operators.delivery import (
         ensure_seqnum_counted, release_numbering_cache)
 
@@ -587,15 +609,14 @@ def _destination(df: DataFrame, spec: Mapping, templates: Mapping | None = None)
         elif kind == "text":
             # file() destination: an optional template() renders each line
             # (the reference's file-dest default is $ISODATE $HOST $MSGHDR$MSG)
+            lines, column = df, spec.get("column", "raw")
             if "template" in spec:
-                from syslog_ng_spark.template import template_format
-
-                rendered = template_format(df, spec["template"].rstrip("\n"),
-                                           target="rendered", templates=templates)
-                sinks.write_text(rendered, spec["path"], column="rendered",
-                                 mode=spec.get("mode", "overwrite"))
+                lines, column = _rendered(df, spec["template"].rstrip("\n"), templates,
+                                          compiled), "rendered"
+            if on_driver:
+                sinks.append_text_on_driver(lines, spec["path"], column=column)
             else:
-                sinks.write_text(df, spec["path"], column=spec.get("column", "raw"),
+                sinks.write_text(lines, spec["path"], column=column,
                                  mode=spec.get("mode", "overwrite"))
         elif kind == "program":
             sinks.ProgramDestination(
@@ -895,6 +916,16 @@ def run_conf_stream(
     file-family path write one micro-batch at a time: their committers
     share the path's `_temporary` directory.
 
+    A text destination on a local path (the file() destination) is
+    appended by the driver, one part file per micro-batch
+    (`sinks.append_text_on_driver`): the file lives on the daemon's
+    host, and Spark's writer would add a commit protocol to every
+    trigger. Each destination compiles its template once and reuses
+    the Column for every micro-batch of the same schema
+    (`_rendered`). Both keep a trigger well inside perfbench's 250 ms
+    file interval, where its latency stays flat rather than queueing
+    (SCALE.md Addendum 24).
+
     The streams run on a session of their own, derived from `spark`
     (`spark.newSession()`) with `spark`'s runtime SQL conf copied in;
     `spark` itself is not changed. When any file() source is local
@@ -970,9 +1001,15 @@ def run_conf_stream(
         # counter lives for the daemon's lifetime, so each micro-batch
         # continues where the last ended
         seq_next = [1] * len(dests)
+        # a local text destination is written by the driver, and each
+        # destination compiles its template once for the daemon's life
+        on_driver = [d["kind"] == "text" and stream_src.lists_locally(spark, d["path"])
+                     for d in dests]
+        compiled = [{} for _ in dests]
 
         def write_batch(batch_df, _id, _dests=dests, _tpls=tpls, _seq=seq_next,
-                        _steps=batch_steps, _rcpt=rcpt_path):
+                        _steps=batch_steps, _rcpt=rcpt_path, _driver=on_driver,
+                        _compiled=compiled):
             rcpt_frame = None
             if _rcpt:
                 from syslog_ng_spark.operators.delivery import (
@@ -996,7 +1033,8 @@ def run_conf_stream(
             for i, d in enumerate(_dests):
                 with locks.get(d.get("path"), nullcontext()):
                     _seq[i] += _destination(
-                        batch_df, {**d, "seqnum_start": _seq[i]}, templates=_tpls)
+                        batch_df, {**d, "seqnum_start": _seq[i]}, templates=_tpls,
+                        on_driver=_driver[i], compiled=_compiled[i])
             if _rcpt:
                 release_numbering_cache(rcpt_frame)
                 tmp = _rcpt + ".tmp"

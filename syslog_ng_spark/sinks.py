@@ -30,6 +30,44 @@ def write_text(df: DataFrame, path: str, column: str = "raw", mode: str = "overw
     df.select(column).write.mode(mode).text(path)
 
 
+def append_text_on_driver(df: DataFrame, path: str, column: str = "raw") -> int:
+    """Append the `column` strings of `df`, one line each, to the local
+    directory `path` as one new part file written by the driver: the
+    daemon's local file() destination, whose files live on the
+    daemon's host. Spark's writer would pay a commit protocol per
+    micro-batch (a `_temporary` directory, renames, `_SUCCESS`, and on
+    a host without libhadoop one forked `chmod` per file and directory
+    it creates), several times what a micro-batch's lines cost (SCALE.md
+    Addendum 24). Rows arrive one partition at a time
+    (`toLocalIterator`), so the driver holds at most two partitions. The
+    file is written under a hidden name and renamed when complete, so a
+    reader sees it whole, as with Spark's committer; a null renders as
+    an empty line, as in Spark's text writer. Writes no file for an
+    empty frame. Returns the number of lines written."""
+    import os
+    import uuid
+    from urllib.parse import urlparse
+
+    if path.startswith("file:"):
+        path = urlparse(path).path
+    os.makedirs(path, exist_ok=True)
+    name = f"part-00000-{uuid.uuid4()}-c000.txt"
+    tmp = os.path.join(path, f".{name}.tmp")
+    n = 0
+    try:
+        with open(tmp, "w", encoding="utf-8", newline="") as f:
+            for row in df.select(column).toLocalIterator(prefetchPartitions=True):
+                f.write(row[0] or "")
+                f.write("\n")
+                n += 1
+        if n:
+            os.replace(tmp, os.path.join(path, name))
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    return n
+
+
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
     df.write.mode(mode).option("header", str(header).lower()).csv(path)
 

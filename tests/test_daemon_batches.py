@@ -4,8 +4,9 @@
 destinations read, so a parser whose output no destination reads is
 pruned from the micro-batch plan, as it is from the batch plan. The
 daemon writes its checkpoint logs through Hadoop's FileSystem API when
-the checkpoint is local, and the queries of one conf write a shared
-file-family destination one micro-batch at a time.
+the checkpoint is local, appends a local file() destination from the
+driver with a template compiled once, and the queries of one conf
+write a shared file-family destination one micro-batch at a time.
 """
 from __future__ import annotations
 
@@ -142,14 +143,25 @@ log {{ source(s); destination(d); }};
     assert _lines(out) == ["a1", "a2", "b1"]
 
 
-def test_paths_sharing_a_destination_write_each_line_once(spark, tmp_path):
-    """Two log paths write the same two file() destinations; their
-    queries start back to back, so their micro-batches overlap. Each
-    destination's committer owns `_temporary` for one write at a time:
-    no query fails and every line lands once per destination."""
+def test_paths_sharing_a_destination_write_each_line_once(spark, tmp_path, monkeypatch):
+    """Two log paths write the same two file() destinations and one
+    parquet destination; their queries start back to back, so their
+    micro-batches overlap. The driver names each text part file
+    uniquely, and the parquet committer owns `_temporary` for one
+    write at a time: no query fails and every line lands once per
+    destination."""
     for s in ("s1", "s2"):
         for k in range(3):
             _write(tmp_path / s / f"f{k}.log", [f"{s}-{k}-{i}" for i in range(20)])
+    compile_conf = config.compile_conf
+
+    def with_parquet(*args, **kwargs):
+        pipelines = compile_conf(*args, **kwargs)
+        for p in pipelines:
+            p["destinations"].append({"kind": "parquet", "path": str(tmp_path / "out3")})
+        return pipelines
+
+    monkeypatch.setattr(config, "compile_conf", with_parquet)
     conf = f"""
 source s1 {{ file("{tmp_path}/s1/*.log" flags(no-parse)); }};
 source s2 {{ file("{tmp_path}/s2/*.log" flags(no-parse)); }};
@@ -162,3 +174,65 @@ log {{ source(s2); destination(d1); destination(d2); }};
     want = sorted(f"{s}-{k}-{i}" for s in ("s1", "s2") for k in range(3) for i in range(20))
     assert _lines(tmp_path / "out1") == want
     assert _lines(tmp_path / "out2") == want
+    assert sorted(r.raw for r in spark.read.parquet(str(tmp_path / "out3")).collect()) == want
+
+
+def test_daemon_appends_local_text_destinations_from_the_driver(spark, tmp_path):
+    """A local file() destination gets one part file per micro-batch,
+    written by the driver: no `_temporary`, `_SUCCESS` or `.crc` files,
+    and a restart appends where the last run stopped."""
+    src, out = tmp_path / "in", tmp_path / "out"
+    conf = f"""
+source s {{ file("{src}/*.log" flags(no-parse)); }};
+destination d {{ file("{out}" template("$MSG\\n")); }};
+log {{ source(s); destination(d); }};
+"""
+    _write(src / "a.log", ["a1", "a2"])
+    _drain(spark, conf, tmp_path / "ck")
+    _write(src / "b.log", ["b1"])
+    _drain(spark, conf, tmp_path / "ck")
+    names = sorted(os.listdir(out))
+    assert len(names) == 2 and all(n.startswith("part-") for n in names), names
+    assert _lines(out) == ["a1", "a2", "b1"]
+
+
+def test_append_text_on_driver_writes_one_whole_file(spark, tmp_path):
+    """Every partition's lines, in order, land in one part file; a
+    null renders as an empty line, a `file:` URI names the same
+    directory, and an empty frame writes nothing."""
+    from syslog_ng_spark.sinks import append_text_on_driver
+
+    df = spark.range(0, 7, numPartitions=3).selectExpr(
+        "IF(id = 3, NULL, concat('line ', id)) AS raw")
+    assert append_text_on_driver(df, f"file://{tmp_path}/out") == 7
+    (name,) = os.listdir(tmp_path / "out")
+    assert (tmp_path / "out" / name).read_text() == (
+        "line 0\nline 1\nline 2\n\nline 4\nline 5\nline 6\n")
+    assert append_text_on_driver(df.limit(0), str(tmp_path / "out")) == 0
+    assert os.listdir(tmp_path / "out") == [name]
+
+
+def test_destination_compiles_its_template_once_per_schema(spark, tmp_path, monkeypatch):
+    """A writer that keeps `compiled` across calls (the daemon, across
+    micro-batches) compiles a destination's template once per frame
+    schema."""
+    from syslog_ng_spark import template
+
+    calls = []
+    compile_template = template.compile_template
+
+    def counting(*args, **kwargs):
+        calls.append(args[0])
+        return compile_template(*args, **kwargs)
+
+    monkeypatch.setattr(template, "compile_template", counting)
+    spec = {"kind": "text", "path": str(tmp_path / "out"), "template": "$MSG\n",
+            "mode": "append"}
+    compiled = {}
+    for k in range(3):
+        df = spark.createDataFrame([(f"m{k}",)], "message string")
+        config._destination(df, spec, compiled=compiled)
+    config._destination(spark.createDataFrame([("m", 1)], "message string, n int"),
+                        spec, compiled=compiled)
+    assert calls == ["$MSG", "$MSG"]
+    assert _lines(tmp_path / "out") == ["m", "m0", "m1", "m2"]
